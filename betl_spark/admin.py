@@ -36,6 +36,7 @@ from pyspark.sql import SparkSession, types as T
 
 from betl_spark.config import Conf
 from betl_spark.io.datastore import Datastore
+from betl_spark.io.readers import local_rows
 from betl_spark.schema.registry import Column, SchemaRegistry, Table
 
 # Spark type → declared dataType (inverse of registry._TYPE_MAP, used
@@ -277,7 +278,7 @@ def run_rebuilds(
     for layer in layers:
         for t in registry.tables(layer):
             path = conf.layer_path(layer, t.name)
-            empty = spark.createDataFrame([], t.to_struct_type())
+            empty = local_rows(spark, [], t.to_struct_type())
             empty.write.mode("overwrite").parquet(path)
             rebuilt.append(f"{layer}.{t.name}")
     return rebuilt

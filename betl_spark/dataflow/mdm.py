@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from betl_spark.dataflow.journal import log_alert
+from betl_spark.io.readers import local_rows
 from betl_spark.io.writers import null_to_empty
 from betl_spark.schema.registry import all_string_schema
 
@@ -39,9 +40,10 @@ class MappingStore:
 
     def read_df(self, spark) -> DataFrame:
         header, *data = self.rows
-        return spark.createDataFrame(
+        return local_rows(
+            spark,
             [[("" if v is None else str(v)) for v in r] for r in data],
-            schema=all_string_schema([str(h) for h in header]),
+            all_string_schema([str(h) for h in header]),
         )
 
     def write_rows(self, header: list[str], data: list[list[str]]) -> None:

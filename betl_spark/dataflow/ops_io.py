@@ -12,7 +12,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
 
-from betl_spark.io.readers import read_source_table, read_staged
+from betl_spark.io.readers import local_rows, read_source_table, read_staged
 from betl_spark.io.writers import empty_to_null, write_staged
 from betl_spark.schema.registry import all_string_schema, clean_table_name
 
@@ -147,7 +147,7 @@ class IOOps:
                 if all(
                     all(r is None or isinstance(r, str) for r in row) for row in rows
                 ):
-                    df = self.spark.createDataFrame(rows, schema=all_string_schema(cols))
+                    df = local_rows(self.spark, rows, all_string_schema(cols))
                 else:
                     df = self.spark.createDataFrame(rows, schema=cols)
             else:

@@ -9,17 +9,19 @@ string that ``collapse_audit_cols_to_nk`` produces on facts.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from betl_spark.io.readers import local_rows
 
 LOAD_OPS = ["BULK", "DELTA", "MANUAL", "DEFAULT"]
 
 
 def audit_dimension(spark: SparkSession) -> DataFrame:
-    # built entirely JVM-side (explode + range): a createDataFrame from a
-    # Python list materializes as a 32-partition Python RDD and the cross
-    # join becomes |p1|×|p2| Python tasks — ~1000 tasks for 40 rows
-    ops_list = ", ".join(f"'{o}'" for o in LOAD_OPS)
-    ops = spark.sql(f"SELECT explode(array({ops_list})) AS load_operation")
+    ops = local_rows(
+        spark,
+        [(o,) for o in LOAD_OPS],
+        T.StructType([T.StructField("load_operation", T.StringType(), False)]),
+    )
     scores = spark.range(10).select(F.col("id").cast("int").alias("data_quality_score"))
     return ops.crossJoin(scores.coalesce(1)).select("load_operation", "data_quality_score")
 

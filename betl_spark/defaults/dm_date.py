@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from betl_spark.io.readers import local_rows
+
 
 def date_dimension(
     spark: SparkSession,
@@ -47,13 +49,8 @@ def date_dimension(
     nullable = T.StructType(
         [T.StructField(f.name, f.dataType, True) for f in dim.schema.fields]
     )
-    defaults = spark.createDataFrame(
-        [
-            (-1, None, None, None, None, None, None, None, None, None, None),
-            (-2, None, None, None, None, None, None, None, None, None, None),
-        ],
-        schema=nullable,
-    )
+    blank = (None,) * (len(nullable) - 1)
+    defaults = local_rows(spark, [(-1, *blank), (-2, *blank)], nullable)
     return dim.unionByName(defaults)
 
 

@@ -33,7 +33,7 @@ import os
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from betl_spark.dataflow.audit import collapse_audit_cols_to_nk
-from betl_spark.io.readers import read_staged
+from betl_spark.io.readers import local_rows, read_staged
 from betl_spark.io.writers import write_staged
 from betl_spark.schema.registry import Table
 
@@ -105,7 +105,10 @@ def assign_surrogate_keys(
 def default_rows_df(spark, schema: T.StructType, sk_col: str, rows: list[dict]) -> DataFrame:
     """Build the negative-SK default rows (−1 MISSING, −2 UNRECOGNISED;
     reference stageLoad.py:76-93 + dmDate.py:101-129). Unspecified
-    string columns get the row's description, others null."""
+    string columns get the row's description, others null.
+
+    Built with ``local_rows``: a JVM-side local relation of exactly
+    ``schema``, so the union with the dimension runs no Python tasks."""
     out_rows = []
     for spec in rows:
         vals = []
@@ -119,7 +122,7 @@ def default_rows_df(spark, schema: T.StructType, sk_col: str, rows: list[dict]) 
             else:
                 vals.append(None)
         out_rows.append(tuple(vals))
-    return spark.createDataFrame(out_rows, schema=schema)
+    return local_rows(spark, out_rows, schema)
 
 
 def sk_nk_map(dim: DataFrame, sk_col: str, nk_cols: list[str]) -> DataFrame:
@@ -206,8 +209,8 @@ def bulk_load_fact(pipeline, table: Table) -> None:
             # dim not loaded (e.g. dm_audit skipped): every NK is
             # unmatched and resolves to −1, like the reference's
             # missing-key fallback (stageLoad.py:399-404)
-            m = spark.createDataFrame(
-                [], T.StructType([T.StructField("sk", T.LongType()), T.StructField("nk", T.StringType())])
+            m = local_rows(
+                spark, [], T.StructType([T.StructField("sk", T.LongType()), T.StructField("nk", T.StringType())])
             )
         else:
             m = read_staged(spark, map_path, all_string=False)

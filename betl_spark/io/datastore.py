@@ -19,7 +19,7 @@ Datastore is a declarative descriptor the readers translate into
   staging semantics like FILESYSTEM, values trimmed)
 - POSTGRES / SQLITE → ``spark.read.jdbc`` (needs a JDBC driver jar on the
   cluster; constructed lazily so tests without one still import)
-- GSHEET / EXCEL → driver-side fetch → ``spark.createDataFrame``. The
+- GSHEET / EXCEL → driver-side fetch → ``local_rows``. The
   fetch libraries (gspread/openpyxl) are not in this container, so those
   fetches are import-gated; the Spark-side plumbing is real.
 

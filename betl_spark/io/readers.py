@@ -11,11 +11,28 @@ Reference semantics reproduced (SURVEY.md §1.2):
   parquet/JDBC scan (betl/io/dbIO.py:7,20).
 
 Everything returns a lazy DataFrame; no driver-side materialization.
+Two paths also launch no Spark job to build the DataFrame:
+
+- ``read_staged`` takes a staged directory's schema from the footer of
+  its first data file (the ``org.apache.spark.sql.parquet.row.metadata``
+  key the parquet writer stores, the same key Spark's own non-merging
+  inference reads), over the Hadoop ``FileSystem`` on the driver, and
+  reads with that schema. Spark's inference would run a job to read the
+  same footer. It falls back to Spark's inference for a partitioned
+  layout, a directory with no data file, a footer without the key, or
+  ``spark.sql.parquet.mergeSchema`` on.
+- ``local_rows`` turns driver-side rows into a ``LocalTableScan`` via
+  Arrow, never a Python RDD whose every downstream task runs a Python
+  worker.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import json
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from betl_spark.io.datastore import Datastore
 from betl_spark.schema.registry import all_string_schema
@@ -44,6 +61,58 @@ def read_csv_all_string(
     return df.limit(limit) if limit else df
 
 
+def local_rows(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """Driver-side rows (tuples in ``schema`` field order) as a
+    DataFrame of exactly ``schema``, built in the JVM.
+
+    ``spark.createDataFrame(list, schema)`` parallelizes the list as a
+    ``defaultParallelism``-partition Python RDD, so every job over it
+    (a union with a dimension, a cross join) runs Python-worker tasks.
+    An Arrow table becomes a ``LocalTableScan`` instead. Naive datetimes
+    in a ``TimestampType`` column are taken as UTC.
+    """
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
+ROW_METADATA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The Spark schema in the footer of the first data file under a flat
+    parquet directory (or of the file ``path``), read on the driver with
+    parquet-mr: no Spark job. ``None`` where ``read_staged`` falls back,
+    and for a missing path or a glob, which Spark resolves itself."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    jvm = spark._jvm
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(hconf)
+    if not fs.exists(root):
+        return None
+    first = None
+    for st in fs.listStatus(root):
+        name = st.getPath().getName()
+        if st.isDirectory():
+            return None
+        if first is None and not name.startswith(("_", ".")):
+            first = st
+    if first is None:
+        return None
+    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        hconf,
+        first,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    row_json = footer.getFileMetaData().getKeyValueMetaData().get(ROW_METADATA_KEY)
+    return None if row_json is None else T.StructType.fromJson(json.loads(row_json))
+
+
 def read_staged(
     spark: SparkSession,
     path: str,
@@ -52,10 +121,18 @@ def read_staged(
 ) -> DataFrame:
     """Read a staged table (parquet dir written by ``write_staged``).
 
+    The schema comes from the first data file's footer
+    (``footer_schema``), so building the read launches no Spark job. A
+    partitioned layout, a directory with no data file, a footer without
+    Spark's row metadata, or ``spark.sql.parquet.mergeSchema`` on falls
+    back to ``spark.read.parquet``'s inference.
+
     Staging layers keep the reference's all-string model; nulls read back
     as '' so operator semantics match (betl/io/fileIO.py:26-51).
     """
-    df = spark.read.parquet(path)
+    schema = footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if all_string:
         df = df.select(
             [F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c) for c in df.columns]
@@ -181,7 +258,7 @@ def _read_sqlite_table(
     spark: SparkSession, datastore: Datastore, table_name: str
 ) -> DataFrame:
     """SQLite extract without a JDBC driver jar: stdlib ``sqlite3``
-    driver-side read → ``createDataFrame``, with column types mapped
+    driver-side read → ``local_rows``, with column types mapped
     from the declared affinities (INT→long, REAL→double, else string).
 
     The reference reads DB sources exactly this way — one eager
@@ -192,8 +269,6 @@ def _read_sqlite_table(
     """
     import os
     import sqlite3
-
-    from pyspark.sql import types as T
 
     db = datastore.path
     if os.path.isdir(db):
@@ -255,7 +330,7 @@ def _read_sqlite_table(
         return v if isinstance(v, str) else str(v)
 
     rows = [tuple(conv(v, t) for v, t in zip(r, types)) for r in raw]
-    return spark.createDataFrame(rows, schema=T.StructType(fields))
+    return local_rows(spark, rows, T.StructType(fields))
 
 
 def fetch_gsheet_rows(datastore: Datastore, worksheet: str) -> list[list]:
@@ -298,14 +373,15 @@ def _read_gsheet(spark: SparkSession, datastore: Datastore, worksheet: str) -> D
     """GSheet scan: row-1 headers, all-string cells
     (reference betl/io/gsheetIO.py:4-12). Driver-side fetch via gspread
     (``fetch_gsheet_rows`` — sheets are small config/mapping inputs, so
-    a driver fetch then ``createDataFrame`` is the right distribution
+    a driver fetch then ``local_rows`` is the right distribution
     shape), or injected ``extra['rows']``.
     """
     rows = fetch_gsheet_rows(datastore, worksheet)
     header, *data = rows
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [[("" if v is None else str(v)) for v in r] for r in data],
-        schema=all_string_schema([str(h) for h in header]),
+        all_string_schema([str(h) for h in header]),
     )
 
 
@@ -316,7 +392,7 @@ def _read_excel(spark: SparkSession, datastore: Datastore, worksheet: str) -> Da
     Live path: ``datastore.workbook`` names an .xlsx file, read
     driver-side with the stdlib SpreadsheetML parser (io/xlsx.py) —
     workbook sheets are small config/mapping inputs, so a driver fetch
-    then ``createDataFrame`` is the right distribution shape. A
+    then ``local_rows`` is the right distribution shape. A
     pre-fetched list-of-rows can still be injected via
     ``extra['rows']`` (kept for parity with the gsheet seam).
     """
@@ -331,12 +407,13 @@ def _read_excel(spark: SparkSession, datastore: Datastore, worksheet: str) -> Da
 
         rows = read_worksheet_rows(datastore.workbook, worksheet)
     names, trimmed, width = excel_table(rows, worksheet)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             [("" if v is None else str(v)) for v in r[:width]] + [""] * (width - len(r))
             for r in trimmed
         ],
-        schema=all_string_schema(names),
+        all_string_schema(names),
     )
 
 

@@ -3,15 +3,23 @@
 assignment and default rows → fact load with SK lookup and −1 fallback."""
 
 import datetime
+import decimal
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Row, functions as F, types as T
 
 from betl_spark.config import Conf
 from betl_spark.dataflow.core import DataFlow
 from betl_spark.defaults.dm_date import date_dimension
 from betl_spark.defaults.dm_audit import audit_dimension
-from betl_spark.defaults.load import assign_surrogate_keys, sk_nk_map, resolve_fact_fks
+from betl_spark.defaults.load import (
+    assign_surrogate_keys,
+    default_rows_df,
+    resolve_fact_fks,
+    sk_nk_map,
+)
+from betl_spark.io.readers import footer_schema, local_rows, read_staged
+from betl_spark.io.writers import write_staged
 from betl_spark.schema.registry import SchemaRegistry, all_string_schema
 from tests.conftest import rows
 
@@ -57,6 +65,166 @@ def test_write_validates_and_reorders_against_schema(spark, tmp_path):
     dfl.createDataset("bad", {"nk_thing": ["k"], "attr": ["x"], "rogue": ["!"]})
     with pytest.raises(ValueError, match="rogue"):
         dfl.write("bad", "dm_thing", "BSE", keepDataflowOpen=True)
+
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+TYPED_SCHEMA = T.StructType([
+    T.StructField("amount", T.DecimalType(12, 2), True, {"comment": "money"}),
+    T.StructField("day", T.DateType()),
+    T.StructField("ts", T.TimestampType()),
+    T.StructField("ts_ntz", T.TimestampNTZType()),
+    T.StructField("tags", T.ArrayType(T.LongType())),
+    T.StructField("pair", T.StructType([
+        T.StructField("a", T.IntegerType(), False), T.StructField("b", T.StringType()),
+    ])),
+    T.StructField("attrs", T.MapType(T.StringType(), T.DoubleType())),
+    T.StructField("n", T.LongType(), False),
+])
+TYPED_ROW = (
+    decimal.Decimal("1.25"), datetime.date(2020, 1, 2),
+    datetime.datetime(2020, 1, 2, 3, 4, 5), datetime.datetime(2020, 1, 2, 3, 4, 5),
+    [1, 2], (1, "x"), {"k": 1.5}, 7,
+)
+
+
+@pytest.mark.parametrize("kind", ["typed", "empty", "all_string"])
+def test_read_staged_schema_equals_spark_inference(spark, tmp_path, kind):
+    if kind == "all_string":
+        df = spark.createDataFrame([("1", ""), ("", "y")], schema=all_string_schema(["a", "b"]))
+    else:
+        df = spark.createDataFrame([TYPED_ROW] * 2, TYPED_SCHEMA)
+        df = df.limit(0) if kind == "empty" else df
+    path = str(tmp_path / kind)
+    write_staged(df, path)
+    got = read_staged(spark, path, all_string=False)
+    assert got.schema.json() == spark.read.parquet(path).schema.json()
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, spark.read.parquet(path).collect())
+    )
+
+
+def test_read_staged_flat_dir_launches_no_job(spark, tmp_path):
+    path = str(tmp_path / "flat")
+    write_staged(spark.createDataFrame([TYPED_ROW], TYPED_SCHEMA).repartition(3), path)
+    before = _jobs(spark)
+    read_staged(spark, path, all_string=False)
+    read_staged(spark, path, all_string=True, limit=1)
+    assert _jobs(spark) == before
+
+
+def test_read_staged_falls_back_for_partitions_and_merge_schema(spark, tmp_path):
+    part = str(tmp_path / "part")
+    write_staged(
+        spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long"), part, partition_by=["k"]
+    )
+    assert footer_schema(spark, part) is None
+    got = read_staged(spark, part, all_string=False)
+    assert got.schema.json() == spark.read.parquet(part).schema.json()
+    assert sorted(got.columns) == ["k", "v"]
+
+    merged = str(tmp_path / "merged")
+    write_staged(spark.createDataFrame([(1,)], "a long"), merged)
+    write_staged(spark.createDataFrame([(2, "x")], "a long, b string"), merged, mode="append")
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try:
+        assert footer_schema(spark, merged) is None
+        got = read_staged(spark, merged, all_string=False)
+        assert got.schema.json() == spark.read.parquet(merged).schema.json()
+        assert sorted(got.columns) == ["a", "b"]
+    finally:
+        spark.conf.unset("spark.sql.parquet.mergeSchema")
+
+
+def test_local_rows_keep_exact_schema_without_python_rdd(spark):
+    df = local_rows(spark, [TYPED_ROW], TYPED_SCHEMA)
+    assert df.schema == TYPED_SCHEMA
+    assert [tuple(r) for r in df.drop("ts").collect()] == [
+        (*TYPED_ROW[:2], *TYPED_ROW[3:5], Row(a=1, b="x"), *TYPED_ROW[6:])
+    ]
+    # a naive TimestampType value is taken as UTC
+    assert df.select(F.unix_seconds("ts")).first()[0] == 1577934245
+    empty = local_rows(spark, [], TYPED_SCHEMA)
+    assert empty.schema == TYPED_SCHEMA and empty.count() == 0
+    assert "ExistingRDD" not in _executed_plan(df) + _executed_plan(empty)
+
+
+def test_load_path_runs_no_python_rdd(spark, tmp_path, monkeypatch):
+    """The −1/−2 default rows, the bulk-loaded BSE dimension and the
+    missing-dimension key map are JVM-side local relations, never a
+    Python RDD scan."""
+    import betl_spark.defaults.load as load
+    from betl_spark.pipeline import Pipeline
+
+    schema = T.StructType([
+        T.StructField("sk_x", T.LongType(), False),
+        T.StructField("nk_x", T.StringType(), True),
+        T.StructField("price", T.DecimalType(10, 2), True),
+    ])
+    defaults = default_rows_df(
+        spark, schema, "sk_x",
+        [{"sk_x": -1, "_label": "MISSING"}, {"sk_x": -2, "_label": "UNRECOGNISED"}],
+    )
+    assert defaults.schema == schema
+    assert rows(defaults) == [(-1, "MISSING", None), (-2, "UNRECOGNISED", None)]
+    assert "ExistingRDD" not in _executed_plan(defaults)
+
+    written = {}
+
+    def capture(df, path, *a, **kw):
+        written[path.rstrip("/").rsplit("/", 1)[-1]] = df
+        write_staged(df, path, *a, **kw)
+
+    monkeypatch.setattr(load, "write_staged", capture)
+    conf = Conf(app_root=str(tmp_path))
+    reg = SchemaRegistry()
+    reg.define("BSE", "dm_x", [
+        ("sk_x", "SERIAL", "Surrogate key"), ("nk_x", "TEXT", "Natural key"),
+        ("price", "NUMERIC", "Attribute"),
+    ])
+    reg.define("BSE", "ft_y", [
+        ("fk_x", "BIGINT", "Foreign key", "dm_x"),
+        ("fk_ghost", "BIGINT", "Foreign key", "dm_ghost"),
+        ("qty", "INTEGER", "Attribute"),
+    ])
+    p = Pipeline(conf, registry=reg, spark=spark)
+    dfl = p.dataflow("stage")
+    dfl.createDataset("dm_x", {"nk_x": ["b", "a"], "price": ["1.50", ""]})
+    dfl.prepForLoad("dm_x")
+    dfl.createDataset("ft_y", {"nk_x": ["a", "z"], "nk_ghost": ["g", "g"], "qty": ["1", "2"]})
+    dfl.prepForLoad("ft_y")
+    load.bulk_load_dimension(p, reg.get_table("BSE", "dm_x"))
+    load.bulk_load_fact(p, reg.get_table("BSE", "ft_y"))
+
+    for name in ("dm_x", "sk_dm_x", "ft_y"):
+        assert "ExistingRDD" not in _executed_plan(written[name]), name
+    dim = written["dm_x"]
+    typed = {f.name: f.dataType for f in dim.schema.fields}
+    assert isinstance(typed["sk_x"], T.LongType)
+    assert isinstance(typed["price"], T.DecimalType)
+    got = {r.sk_x: (r.nk_x, r.price) for r in dim.collect()}
+    assert got[-1] == ("MISSING", None) and got[-2] == ("UNRECOGNISED", None)
+    assert got[1] == ("a", None) and got[2] == ("b", decimal.Decimal("1.50"))
+    fks = {r.qty: (r.fk_x, r.fk_ghost) for r in written["ft_y"].collect()}
+    assert fks == {1: (1, -1), 2: (-1, -1)}
+
+
+def test_star_schema_pipeline_plan_build_job_bound(spark):
+    """Building star_schema_pipeline at sf0.001 launches at most 14
+    Spark jobs: the two source-table reads, SK assignment and the staged
+    writes. A schema-inference job per staged read pushes it over."""
+    from betl_spark.contract.pipeline_e2e import q_star_schema_pipeline
+    from tests.test_oracle_parity import SMALL_DIR
+
+    before = _jobs(spark)
+    q_star_schema_pipeline(spark, SMALL_DIR)
+    assert _jobs(spark) - before <= 14
 
 
 def test_assign_surrogate_keys_dense_in_nk_order(spark):

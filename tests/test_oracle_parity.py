@@ -7,7 +7,9 @@ Tiering (round-14 verdict item 1 — the suite outgrew the driver's
 verify budget): ALL 235 pairs run in every tier; the fast default runs
 them on the smallest data (sf0.001), except queries whose sf0.001
 output degenerates to 0-2 rows (census committed in OPTIMIZATION_r15)
-— those always run at sf0.01 so the check stays non-vacuous. Set
+— those always run at sf0.01 so the check stays non-vacuous. Any
+other query whose sf0.001 oracle result has fewer than 3 rows fails,
+so the census cannot go stale. Set
 ``BETL_FULL_MATRIX=1`` to run everything at sf0.01 (the pre-r15
 behavior)."""
 
@@ -100,6 +102,13 @@ def test_query_matches_oracle(name, spark, duck):
     res = duck(sf_dir).execute(ORACLES[name])
     d_cols = [d[0] for d in res.description]
     d_rows = res.fetchall()
+    # census guard: a small-data run that degenerates to 0-2 rows checks
+    # (almost) nothing — such a query belongs in SF001_DEGENERATE
+    if sf_dir == SMALL_DIR and sf_dir != SF_DIR:
+        assert len(d_rows) >= 3, (
+            f"{name}: oracle returns {len(d_rows)} rows on {sf_dir}; "
+            "add it to SF001_DEGENERATE"
+        )
 
     assert sorted(s_cols) == sorted(d_cols), f"{name}: column names differ"
     assert len(s_rows) == len(d_rows), f"{name}: row count {len(s_rows)} vs {len(d_rows)}"
