@@ -45,6 +45,10 @@ Determinism rules used throughout (so Spark and DuckDB agree bit-for-bit):
   (classifier logit: 6 docs in 50k at sf1).
 """
 
+import glob
+import json
+import os
+
 from betl_spark.contract.tpch import QUERIES as _TPCH
 from betl_spark.contract.operators import QUERIES as _OPERATORS
 from betl_spark.contract.scale import QUERIES as _SCALE
@@ -84,31 +88,46 @@ _ALL = {
 }
 
 # The driver's per-round CORRECTNESS run covers the FIRST 50 entries,
-# so dict order is the verification schedule. Round 10 replaces the
-# per-round hand-written rotation prose with a COMPUTED policy (the
-# round-9 verdict's ask #3 — 175+ queries no longer fit a prose
-# justification):
+# so dict order is the verification schedule (ROTATION.md):
 #
-#   window = NEW_THIS_ROUND (every query must hold a driver green row
-#            the round it ships — round 8's lesson)
+#   window = NEW_THIS_ROUND (queries with no driver green row yet)
 #          + all other queries, strictly oldest-green-first
 #            (ties broken by name),
 #
-# where "oldest green" comes from contract/rotation.py, a ledger of
-# each query's latest driver-green round GENERATED from the committed
-# CORRECTNESS_r*.json files by scripts/update_rotation.py (run once at
-# the start of each round). With ~194 queries and a 50-slot window the
-# policy guarantees every query re-verifies within ceil(194/50) = 4
-# rounds, and the schedule is inspectable ahead of time (ROTATION.md
-# tabulates the planned r10-r13 windows). Per _PRIORITY below, the
-# window leads with the new-this-round queries, then the stalest
-# greens fill the remaining slots oldest-first (round 11: the ten
-# web-curation + five record-linkage round-11-new queries, then 35 of
-# the 46 last-green-r7 queries; the 11 remaining r7 greens verify at
-# r12, inside the computed ceil(|contract|/(50-new)) bound).
-from betl_spark.contract.rotation import LAST_VERIFIED
+# where "oldest green" is LAST_VERIFIED, computed at import from the
+# committed CORRECTNESS_r*.json files, so the schedule can never go
+# stale against the rows the driver has written.
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
 
-NEW_THIS_ROUND = [*_ROUND14]
+
+def _last_verified() -> dict[str, int]:
+    """Latest driver-green round per query. A FULL green matched
+    rows, schema and value hash; a PARTIAL green matched rows and
+    schema with no hash recorded (the rows-only check for queries
+    without a SQL-expressible hash). A full green counts first; a
+    partial green counts only for a query that has never held a full
+    green."""
+    full: dict[str, int] = {}
+    partial: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
+        with open(path) as fh:
+            rows = json.load(fh)
+        for name, v in rows.items():
+            if v.get("err") or not (
+                v.get("rows_match") and v.get("schema_match")
+            ):
+                continue
+            if v.get("hash_match") is True:
+                full[name] = max(full.get(name, 0), rnd)
+            elif v.get("hash_match") is None:
+                partial[name] = max(partial.get(name, 0), rnd)
+    return {**partial, **full}
+
+
+LAST_VERIFIED = _last_verified()
+
+NEW_THIS_ROUND = [n for n in _ALL if n not in LAST_VERIFIED]
 
 _PRIORITY = [
     *NEW_THIS_ROUND,

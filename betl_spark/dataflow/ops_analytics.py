@@ -327,20 +327,17 @@ class AnalyticsOps:
         valueCol: str,
         alpha: float = 0.3,
         k: int = 8,
-        nBands: int | None = None,
         targetDataset: str | None = None,
         desc: str = "",
     ) -> DataFrame:
         """Bounded-window EWMA smoothing
-        (operators/timeseries.py:ewma_bounded). ``nBands`` opts into
-        the banded contribution-explode strategy for
-        low-cardinality-key streams."""
+        (operators/timeseries.py:ewma_bounded)."""
         from betl_spark.operators import timeseries
 
         with self.journal.step("ewma", desc or f"ewma {dataset}"):
             out = timeseries.ewma_bounded(
                 self._get(dataset), partCol, tsMicrosCol, tiebreakCol,
-                valueCol, alpha=alpha, k=k, n_bands=nBands,
+                valueCol, alpha=alpha, k=k,
             )
             self.data[targetDataset or f"{dataset}_ewma"] = out
         return out

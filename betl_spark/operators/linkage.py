@@ -599,7 +599,9 @@ def sorted_neighborhood_pairs(
     # same treatment as link_records: the rank's range partitioning
     # mirrors the input's partition count, and a small vocabulary (one
     # coalesced shuffle output) would otherwise range-partition to ONE
-    # partition — a plan NO-OP at real scale, parallelism below it
+    # partition. The repartition is a NO-OP at real scale; the probe is
+    # not: over a post-shuffle vocabulary it runs the upstream shuffle
+    # as a hidden job at plan build (see ensure_parallelism)
     idx = assign_surrogate_keys(
         ensure_parallelism(names.select("name")), "__rn", ["name"]
     )

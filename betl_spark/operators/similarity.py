@@ -922,7 +922,6 @@ def semantic_dedup(
     threshold: float = 0.3,
     pair_backend: str = "codegen",
     survivor: str = "min_id",
-    auto_two_level: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540, public): k-means cells bound the candidate space
@@ -955,15 +954,8 @@ def semantic_dedup(
     stops scaling past ~10^5-10^6 centroids under the k ∝ n sizing
     rule; ``len(centroid_ids) > MAX_BROADCAST_CENTROIDS`` raises and
     ``semantic_dedup_2level`` (coarse-quantized two-level assignment)
-    is the 10^6-10^7-centroid path. With ``auto_two_level=True`` the
-    guard DELEGATES instead of raising: the coarse model is the ~√k
-    deterministic subsample of ``centroid_ids`` (every ⌈√k⌉-th id in
-    sorted order — a fixed rule, so reruns and independent engines
-    pick identical coarse sets) and the call forwards to
-    ``semantic_dedup_2level`` with the same threshold/survivor. Below
-    the guard the flag changes nothing (property-tested). The
-    codegen/arrow ``pair_backend`` choice applies only to the
-    single-level path.
+    is the 10^6-10^7-centroid path. The codegen/arrow ``pair_backend``
+    choice applies only to the single-level path.
 
     Output: (id, cell_id) for every surviving row. Stages 1-2 are lazy
     and recomputed per consuming action — persist the input upstream if
@@ -972,26 +964,10 @@ def semantic_dedup(
     scale operator.
     """
     if len(centroid_ids) > MAX_BROADCAST_CENTROIDS:
-        if auto_two_level:
-            import math
-
-            srt = sorted(centroid_ids)
-            step = max(1, math.isqrt(len(srt)))
-            coarse_ids = srt[::step]
-            return semantic_dedup_2level(
-                df,
-                id_col,
-                vec_col,
-                centroid_ids,
-                coarse_ids,
-                threshold=threshold,
-                survivor=survivor,
-            )
         raise ValueError(
             f"{len(centroid_ids)} centroids exceed the single-level "
             f"broadcast bound ({MAX_BROADCAST_CENTROIDS}); use "
-            "semantic_dedup_2level (coarse-quantized assignment) or "
-            "pass auto_two_level=True"
+            "semantic_dedup_2level (coarse-quantized assignment)"
         )
     cents = _trained_cents(df, id_col, vec_col, centroid_ids)
     rows = df.select(

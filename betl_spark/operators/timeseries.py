@@ -674,7 +674,6 @@ def ewma_bounded(
     value_col: str,
     alpha: float = 0.3,
     k: int = 8,
-    n_bands: int | None = None,
 ) -> DataFrame:
     """Bounded-window EWMA smoothing per key: each row's smoothed
     value is the normalized exponentially-weighted sum of its last
@@ -692,35 +691,8 @@ def ewma_bounded(
     fewer than ``k`` predecessors are unscored (NULL — a shorter
     window would silently change the effective α).
 
-    Strategy (the same knob pattern as ``rolling_zscore``):
-
-    - ``n_bands=None`` (default): the k-LAG window — one pass, but
-      each key serializes through ONE task, so |keys| bounds
-      parallelism at any scale.
-    - ``n_bands=B``: banded contribution-explode. Rows get their
-      GLOBAL per-key rank from per-(key, band) row_numbers plus
-      cumulative band-count offsets (bands derive from the timestamp
-      value range — deterministic, no driver collect, exactly as
-      ``_rolling_zscore_banded``); then each row EXPLODES k
-      contributions round(round(w_j·x, 9)·1e9) as integer nanos onto
-      target ranks r..r+k−1, and one groupBy((key, rank)) sums them.
-      Integer addition is exact and order-free, so the scores are
-      BIT-IDENTICAL to the LAG formulation (equality-pinned in
-      tests/test_round10_ops.py); a frame is complete iff it received
-      exactly k contributions, which is the same r ≥ k condition the
-      LAG path tests. Parallelism becomes |keys|·B on the rank stage
-      and (key, rank)-hash on the sum stage, at the cost of a k×
-      explode of a 4-column projection. Use when |keys| ≪ cores; the
-      default wins when keys already saturate the cluster.
-
     Output: (part, tiebreak, value, ewma 6dp).
     """
-    if n_bands is not None and int(n_bands) < 1:
-        # same hazard as rolling_zscore's banded branch: B=0 NULLs the
-        # band width and the offsets join silently returns an empty
-        # frame; negative B garbles band ordering — fail before any
-        # plan is built
-        raise ValueError(f"n_bands must be >= 1, got {n_bands}")
     ws = ewma_weights(alpha, k)
     wsum = round(sum(ws), 12)
     # NULL values carry no weight and would NULL every frame they
@@ -733,11 +705,6 @@ def ewma_bounded(
         F.col(tiebreak_col).alias("__id"),
         F.col(value_col).cast("decimal(12,3)").alias("__v"),
     )
-    if n_bands is not None:
-        return _ewma_bounded_banded(
-            base, part_col, tiebreak_col, value_col, ws, wsum,
-            int(n_bands),
-        )
     w = Window.partitionBy("__p").orderBy("__t", "__id")
     lagged = base.select(
         "__p",
@@ -762,113 +729,6 @@ def ewma_bounded(
             F.col(f"__l{len(ws) - 1}").isNotNull(),
             F.round(
                 nanos.cast("double") / F.lit(1e9) / F.lit(wsum), 6
-            ),
-        ).alias("ewma"),
-    )
-
-
-def _ewma_bounded_banded(
-    base: DataFrame,
-    part_col: str,
-    tiebreak_col: str,
-    value_col: str,
-    ws: list[float],
-    wsum: float,
-    n_bands: int,
-) -> DataFrame:
-    """Banded contribution-explode decomposition of the bounded EWMA
-    (see ``ewma_bounded``). Input: (__p, __t, __id, __v) with NULLs
-    already excluded; output matches the LAG path's schema exactly.
-
-    Exactness argument: the global per-key rank r reproduces the LAG
-    path's (__t, __id) total order (bands partition the timestamp
-    VALUE range, so ties share a band and local row_numbers + band
-    offsets compose to the global rank). Each term
-    round(round(w_j·x, 9)·1e9) is the LAG path's expression verbatim
-    — one IEEE multiply on the same double literal, two HALF_UP
-    rounds, one long cast — and long addition is exact and
-    order-independent, so groupBy-sum equals the LAG path's chained
-    `+`. A target rank t receives k contributions iff ranks
-    t−k+1..t all exist, i.e. t ≥ k — precisely the LAG path's
-    "__l{k−1} IS NOT NULL". Target ranks past the key's last row
-    carry no j=0 self contribution and are dropped.
-    """
-    bounds = base.agg(F.min("__t").alias("__mn"), F.max("__t").alias("__mx"))
-    banded = base.crossJoin(F.broadcast(bounds)).select(
-        "__p",
-        "__t",
-        "__id",
-        "__v",
-        # width computed divide-first: multiplying (__t − __mn) by B
-        # first can overflow BIGINT on wide micros ranges
-        F.expr(
-            f"(__t - __mn) DIV ((__mx - __mn) DIV {int(n_bands)} + 1)"
-        ).alias("__band"),
-    )
-    wloc = Window.partitionBy("__p", "__band").orderBy("__t", "__id")
-    loc = banded.select(
-        "__p",
-        "__band",
-        "__id",
-        "__v",
-        F.row_number().over(wloc).alias("__rl"),
-    )
-    tot = banded.groupBy("__p", "__band").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    wb = (
-        Window.partitionBy("__p")
-        .orderBy("__band")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # |keys|·n_bands rows — tiny cumulative window; the join back
-    # broadcasts (AQE sizes it; bounded by construction)
-    off = tot.select(
-        "__p",
-        "__band",
-        F.coalesce(F.sum("__cnt").over(wb), F.lit(0).cast("long")).alias(
-            "__off"
-        ),
-    )
-    g = loc.join(off, ["__p", "__band"]).select(
-        "__p",
-        "__id",
-        "__v",
-        (F.col("__rl") + F.col("__off")).alias("__r"),
-    )
-    vd = F.col("__v").cast("double")
-    contrib = g.select(
-        "__p",
-        "__id",
-        "__v",
-        "__r",
-        F.posexplode(F.array(*[F.lit(w) for w in ws])).alias("__j", "__w"),
-    ).select(
-        "__p",
-        (F.col("__r") + F.col("__j")).alias("__rt"),
-        F.round(F.round(F.col("__w") * vd, 9) * F.lit(1e9))
-        .cast("long")
-        .alias("__term"),
-        F.when(F.col("__j") == 0, F.col("__id")).alias("__sid"),
-        F.when(F.col("__j") == 0, F.col("__v")).alias("__sv"),
-        F.when(F.col("__j") == 0, F.lit(1)).alias("__self"),
-    )
-    agg = contrib.groupBy("__p", "__rt").agg(
-        F.sum("__term").alias("__nanos"),
-        F.count(F.lit(1)).alias("__nc"),
-        F.max("__sid").alias("__oid"),
-        F.max("__sv").alias("__ov"),
-        F.max("__self").alias("__has_self"),
-    )
-    return agg.where(F.col("__has_self").isNotNull()).select(
-        F.col("__p").alias(part_col),
-        F.col("__oid").alias(tiebreak_col),
-        F.col("__ov").cast("double").alias(value_col),
-        F.when(
-            F.col("__nc") == len(ws),
-            F.round(
-                F.col("__nanos").cast("double") / F.lit(1e9) / F.lit(wsum),
-                6,
             ),
         ).alias("ewma"),
     )

@@ -5,9 +5,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``target`` partitions
-    (default ``sparkContext.defaultParallelism``) — but ONLY when the
+def ensure_parallelism(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` up to
+    ``sparkContext.defaultParallelism`` partitions — but ONLY when the
     input has fewer.
 
     Input splits bound operator parallelism: a small parquet file is
@@ -15,14 +15,18 @@ def ensure_parallelism(df: DataFrame, target: int | None = None) -> DataFrame:
     (n-gram construction, shingle/minhash folds) downstream of it runs
     on ONE core no matter how many the cluster has — file-split sizing
     (``spark.sql.files.maxPartitionBytes``) can't subdivide a row
-    group. At real scale the predicate is false (a 100 TB input has
-    thousands of splits) and this is a plan NO-OP — big inputs never
-    pay the exchange; small inputs trade one tiny shuffle for
-    cluster-wide parallelism on the expensive map work.
+    group. Over a scan at real scale the predicate is false (a 100 TB
+    input has thousands of splits) and this is a plan NO-OP — big
+    inputs never pay the exchange; small inputs trade one tiny shuffle
+    for cluster-wide parallelism on the expensive map work.
+
+    The partition-count probe is ``df.rdd``: free over a scan or a
+    narrow plan, but over a post-shuffle input (a ``distinct``, a
+    join, an aggregate) it runs the upstream shuffle as a hidden Spark
+    job while the plan is built — at any scale — so it is not a plan
+    no-op there.
     """
-    spark = df.sparkSession
-    if target is None:
-        target = spark.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -397,34 +397,6 @@ def test_rolling_zscore_banded_plan_shape(spark):
         assert "windowspecdefinition(__p" in seg, p
 
 
-def test_ewma_bounded_banded_plan_shape(spark):
-    # the banded contribution-explode must not smuggle in a real
-    # cartesian or a Python node, and every Window it plans must be
-    # partitioned — no per-key serialized LAG frame remains except the
-    # |keys|×bands offset cumulation
-    from betl_spark.operators.timeseries import ewma_bounded
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    ev = ev.select(
-        "event_type",
-        (F.unix_timestamp("ts") * 1_000_000).alias("__ts_us"),
-        "event_id",
-        "value",
-    )
-    p = plan(
-        ewma_bounded(
-            ev, "event_type", "__ts_us", "event_id", "value", n_bands=32
-        )
-    )
-    assert "CartesianProduct" not in p, p
-    assert "BatchEvalPython" not in p, p
-    windows = list(re.finditer(r"\(\d+\) Window", p))
-    assert windows, p
-    for m in windows:
-        seg = p[m.start() : m.start() + 500]
-        assert "windowspecdefinition(__p" in seg, p
-
-
 def test_winsorized_stats_broadcasts_percentile_table(spark):
     # the O(groups) percentile table must broadcast back onto the big
     # side — a second shuffle of the raw data would double the job

@@ -208,37 +208,9 @@ def test_decile_lift_ranks_scores(spark):
 
 # ---- bounded-lag time series ----
 
-def test_ewma_bounded_matches_python_reference(spark):
-    from betl_spark.operators.timeseries import ewma_bounded, ewma_weights
-
-    vals = [10.0, 12.0, 9.0, 11.0, 14.0, 8.0]
-    df = spark.createDataFrame(
-        [("k", i * 100, i, v) for i, v in enumerate(vals)],
-        "p string, t long, id long, v double",
-    )
-    out = {r["id"]: r["ewma"] for r in
-           ewma_bounded(df, "p", "t", "id", "v", alpha=0.5, k=3).collect()}
-    # rows 0,1 lack k-1 predecessors
-    assert out[0] is None and out[1] is None
-    ws = ewma_weights(0.5, 3)
-    wsum = round(sum(ws), 12)
-    for i in (2, 3, 4, 5):
-        nanos = sum(round(round(w * vals[i - j], 9) * 1e9)
-                    for j, w in enumerate(ws))
-        # the engine renders F.round(double, 6): replay with the
-        # HALF_UP shortest-repr rule (_rhu), not python's banker round
-        assert out[i] == _rhu(nanos / 1e9 / wsum, 6), i
-
-
-def test_ewma_bounded_banded_bit_identical(spark):
-    # the banded contribution-explode (n_bands=B) must reproduce the
-    # LAG-window scores EXACTLY — integer-nanos addition is order-free,
-    # so this pins equality, not approximation. Data exercises:
+def _ewma_lag_rows():
     # multiple keys, duplicate timestamps (unique tiebreaks), NULL
-    # values (excluded rows shift ranks), a key shorter than k, and
-    # band counts 1 / 4 / far-more-bands-than-rows-per-band.
-    from betl_spark.operators.timeseries import ewma_bounded
-
+    # values (excluded rows shift the window), a key shorter than k
     rows = []
     for i in range(113):
         v = None if i % 13 == 5 else 10.0 + ((i * 7919) % 97) / 3.0
@@ -246,32 +218,47 @@ def test_ewma_bounded_banded_bit_identical(spark):
     for i in range(47):
         rows.append(("b", i * 17, 1000 + i, 5.0 + ((i * 31) % 13)))
     rows.append(("tiny", 5, 9999, 1.0))  # under k: NULL ewma, row kept
-    df = spark.createDataFrame(rows, "p string, t long, id long, v double")
+    return rows
 
-    def key(r):
-        return (r["p"], r["id"])
 
-    ref = {
-        key(r): (r["v"], r["ewma"])
-        for r in ewma_bounded(df, "p", "t", "id", "v").collect()
-    }
-    assert ref, "reference output must be non-empty"
-    assert any(e is not None for _, e in ref.values())
-    for bands in (1, 4, 64):
+def test_ewma_bounded_matches_python_reference(spark):
+    from betl_spark.operators.timeseries import ewma_bounded, ewma_weights
+
+    one_key = [("k", i * 100, i, v) for i, v in
+               enumerate([10.0, 12.0, 9.0, 11.0, 14.0, 8.0])]
+    for rows, alpha, k in ((one_key, 0.5, 3), (_ewma_lag_rows(), 0.3, 8)):
+        df = spark.createDataFrame(
+            rows, "p string, t long, id long, v double"
+        )
         got = {
-            key(r): (r["v"], r["ewma"])
+            (r["p"], r["id"]): (r["v"], r["ewma"])
             for r in ewma_bounded(
-                df, "p", "t", "id", "v", n_bands=bands
+                df, "p", "t", "id", "v", alpha=alpha, k=k
             ).collect()
         }
-        assert got == ref, f"n_bands={bands} diverged"
-
-
-def test_ewma_bounded_banded_empty_input(spark):
-    from betl_spark.operators.timeseries import ewma_bounded
-
-    df = spark.createDataFrame([], "p string, t long, id long, v double")
-    assert ewma_bounded(df, "p", "t", "id", "v", n_bands=8).count() == 0
+        ws = ewma_weights(alpha, k)
+        wsum = round(sum(ws), 12)
+        want = {}
+        for key in {r[0] for r in rows}:
+            # NULL values are dropped; the rest ordered by (time,
+            # tiebreak) and read through the engine's DECIMAL(12,3) cast
+            seq = sorted((t, i, _rhu(v, 3)) for p, t, i, v in rows
+                         if p == key and v is not None)
+            vals = [v for _, _, v in seq]
+            for n, (_, i, v) in enumerate(seq):
+                ewma = None  # rows with fewer than k-1 predecessors
+                if n >= k - 1:
+                    nanos = sum(
+                        int(_rhu(_rhu(w * vals[n - j], 9) * 1e9, 0))
+                        for j, w in enumerate(ws)
+                    )
+                    # the engine renders F.round(double, 6): replay with
+                    # the HALF_UP shortest-repr rule (_rhu), not
+                    # python's banker round
+                    ewma = _rhu(nanos / 1e9 / wsum, 6)
+                want[(key, i)] = (v, ewma)
+        assert any(e is not None for _, e in want.values())
+        assert got == want, (alpha, k)
 
 
 def test_cusum_changepoint_locates_level_shift(spark):

@@ -227,7 +227,7 @@ def test_cc_star_same_fixpoint_after_probe_fold(spark):
     assert key(star) == key(uf) == key(ml)
 
 
-# ------------------------------------- auto_two_level (r7 ask #4)
+# ------------------------- single-level broadcast guard (r7 ask #4)
 
 
 def _emb(spark, n=60):
@@ -246,47 +246,14 @@ def _emb(spark, n=60):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_auto_two_level_delegates_past_guard(spark, monkeypatch):
-    import math
-
+def test_semantic_dedup_guard_raises_past_broadcast_bound(spark, monkeypatch):
     from betl_spark.operators import similarity
 
     df = _emb(spark)
     cents = list(range(0, 24))
     monkeypatch.setattr(similarity, "MAX_BROADCAST_CENTROIDS", 8)
-    # without the flag: the guard raises
-    with pytest.raises(ValueError, match="auto_two_level"):
+    with pytest.raises(ValueError, match="semantic_dedup_2level"):
         similarity.semantic_dedup(df, "vec_id", "embedding", cents)
-    # with the flag: delegates to 2level with the deterministic ~sqrt(k)
-    # coarse subsample
-    auto = similarity.semantic_dedup(
-        df, "vec_id", "embedding", cents, auto_two_level=True
-    )
-    step = max(1, math.isqrt(len(cents)))
-    explicit = similarity.semantic_dedup_2level(
-        df, "vec_id", "embedding", cents, sorted(cents)[::step]
-    )
-    key = lambda d: sorted(tuple(r) for r in d.collect())
-    assert key(auto) == key(explicit)
-    # same-rate property vs the single-level path (guard lifted):
-    # survivor COUNT is the dedup rate — one survivor per cluster
-    # either way; the partitioning of pairs differs only at cell edges
-    monkeypatch.setattr(similarity, "MAX_BROADCAST_CENTROIDS", 200_000)
-    single = similarity.semantic_dedup(df, "vec_id", "embedding", cents)
-    assert auto.count() == pytest.approx(single.count(), rel=0.15)
-
-
-def test_auto_two_level_noop_below_guard(spark):
-    from betl_spark.operators import similarity
-
-    df = _emb(spark)
-    cents = [0, 7, 19]
-    base = similarity.semantic_dedup(df, "vec_id", "embedding", cents)
-    flagged = similarity.semantic_dedup(
-        df, "vec_id", "embedding", cents, auto_two_level=True
-    )
-    key = lambda d: sorted(tuple(r) for r in d.collect())
-    assert key(base) == key(flagged)
 
 
 # --------------------------------- classifier_train (r7 ask #5b)

@@ -247,18 +247,16 @@ def test_rolling_zscore_banded_empty_input(spark):
 
 def test_banded_n_bands_validation(spark):
     # n_bands=0 would NULL the band-width expression and the offsets
-    # join would silently return an empty frame; both banded operators
+    # join would silently return an empty frame; the banded operator
     # must reject it before any plan is built (round-14 ADVICE)
     import pytest as _pytest
 
-    from betl_spark.operators.timeseries import ewma_bounded, rolling_zscore
+    from betl_spark.operators.timeseries import rolling_zscore
 
     df = spark.createDataFrame([], "p string, t long, id long, v double")
     for bad in (0, -3):
         with _pytest.raises(ValueError, match="n_bands"):
             rolling_zscore(df, "p", "t", "id", "v", n_bands=bad)
-        with _pytest.raises(ValueError, match="n_bands"):
-            ewma_bounded(df, "p", "t", "id", "v", n_bands=bad)
 
 
 def test_rolling_zscore_constant_window_yields_null(spark):
@@ -853,20 +851,26 @@ FROM w
 
 
 def test_correctness_window_invariants():
-    """The driver verifies exactly the first 50 contract entries; since
-    round 10 the order is COMPUTED (new queries first, then oldest
-    driver-green first from the rotation ledger). Pin the policy's
-    invariants: no unknown/duplicate names, every never-driver-verified
-    query inside the window, the non-new slots strictly oldest-first,
-    full oracle coverage."""
+    """The driver verifies exactly the first 50 contract entries; the
+    order is COMPUTED (never-verified queries first, then oldest
+    driver-green first from the ledger derived from the committed
+    CORRECTNESS_r*.json files). Pin the policy's invariants: no
+    unknown/duplicate names, every never-driver-verified query inside
+    the window, the non-new slots strictly oldest-first, full oracle
+    coverage, and the ledger agreeing with the latest committed round."""
+    import glob
+    import json
+    import os
+
     from betl_spark.contract import (
+        LAST_VERIFIED,
         NEW_THIS_ROUND,
         ORACLES,
         QUERIES,
         _ALL,
         _PRIORITY,
+        _REPO,
     )
-    from betl_spark.contract.rotation import LAST_VERIFIED
 
     assert len(_PRIORITY) == len(set(_PRIORITY)), "duplicate in _PRIORITY"
     unknown = [n for n in _PRIORITY if n not in _ALL]
@@ -885,3 +889,24 @@ def test_correctness_window_invariants():
     )[: len(tail)]
     assert tail == expected, "window tail is not oldest-green-first"
     assert set(ORACLES) == set(QUERIES), "every query needs an oracle"
+    # every full green of the latest committed round is the ledger's
+    # latest round for that query
+    rounds = {
+        int(p.rsplit("_r", 1)[1].split(".")[0]): p
+        for p in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))
+    }
+    rnd = max(rounds)
+    latest = rounds[rnd]
+    with open(latest) as fh:
+        rows = json.load(fh)
+    full = [
+        n
+        for n, v in rows.items()
+        if not v.get("err")
+        and v.get("rows_match")
+        and v.get("schema_match")
+        and v.get("hash_match") is True
+    ]
+    assert full, f"{latest} holds no full green row"
+    stale = [n for n in full if LAST_VERIFIED.get(n) != rnd]
+    assert not stale, f"ledger misses round-{rnd} greens: {stale}"

@@ -728,8 +728,8 @@ def test_ensure_parallelism_is_noop_on_wide_input(spark):
     wide = spark.range(1000).repartition(64)
     assert ensure_parallelism(wide) is wide  # no plan change at scale
     narrow = spark.range(1000).coalesce(1)
-    out = ensure_parallelism(narrow, target=8)
-    assert out.rdd.getNumPartitions() == 8
+    out = ensure_parallelism(narrow)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     assert sorted(r["id"] for r in out.collect()) == list(range(1000))
 
 
