@@ -23,67 +23,15 @@ import sys
 import time
 
 
-# Static-TPC-H normalization anchor: per-query min-of-2 seconds from
-# the ROUND-4 bench at sf0.1 (BENCH_r04.json; queries byte-identical
-# since). The round-6 drift analysis (SCALE.md "Round-6 finding")
-# showed cross-round totals are only comparable after normalizing by
-# this unchanged subset — the host's delivered throughput drifts
-# ~10-25% between rounds. Emitted as tpch_subset_total +
-# tpch_subset_ratio_vs_r4 in every bench so the comparison no longer
-# depends on prose.
-_R4_TPCH_ANCHOR = {
-    "tpch_q10_returned_items": 0.61,
-    "tpch_q11_important_parts": 0.63,
-    "tpch_q13_customer_distribution": 0.5,
-    "tpch_q15_top_supplier": 0.59,
-    "tpch_q16_supplier_count": 0.76,
-    "tpch_q17_small_qty_revenue": 0.5,
-    "tpch_q18_large_volume_customer": 1.15,
-    "tpch_q1_pricing_summary": 1.26,
-    "tpch_q20_promotion_suppliers": 0.51,
-    "tpch_q21_waiting_suppliers": 1.21,
-    "tpch_q2_min_cost_supplier": 0.72,
-    "tpch_q3_shipping_priority": 0.7,
-    "tpch_q4_order_priority": 0.62,
-    "tpch_q5_local_supplier": 0.98,
-    "tpch_q7_volume_shipping": 0.81,
-    "tpch_q8_market_share": 0.89,
-    "tpch_q9_product_type_profit": 0.8,
-}
-
-
-# Composite drift anchor (round-11 verdict ask #5): the TPC-H-only
-# anchor rides ONE drift axis (join-heavy), and the round-11 bench
-# sections measured the anchor itself swinging ±34% within a day while
-# CPU-bound families rode a different axis. This basket spans five
-# workload families — join-heavy, agg-heavy, string/codegen-heavy,
-# shuffle-light scan, stateful streaming — with per-query min-of-2/3
-# seconds from the ROUND-11 driver bench at sf0.1 (BENCH_r11.json /
-# committed BENCH_FULL.json; queries byte-identical since). The
-# composite ratio is the MEDIAN of per-query ratios, so one family's
-# host-pressure spike cannot drag the whole normalization; both
-# normalizations are emitted for the transition round(s), and the
-# TPC-H subtotal stays for cross-round continuity.
-_R11_COMPOSITE_ANCHOR = {
-    "tpch_q9_product_type_profit": 1.0284,  # join-heavy
-    "tpch_q1_pricing_summary": 1.4093,  # agg-heavy scan
-    "token_count_bpe": 1.5392,  # string/codegen-heavy
-    "url_parse_docs": 0.2915,  # shuffle-light codegen scan
-    "events_stream_stateful": 1.8397,  # stateful streaming
-}
-
-
-# Round-15 anchor re-pin (round-14 verdict ask #5): two of the r11
-# composite members (token_count_bpe, url_parse_docs) were OPTIMIZED in
-# round 14, and the r4 TPC-H anchor predates the session-wide
-# shuffled-hash-join config — both old anchors now mix code delta into
-# what should be pure host-drift normalization. These baskets re-pin
-# per-query min-of-2/3 seconds from the round-14 builder's committed
-# closing sweep (commit b4cdc29 BENCH_FULL.json: 32 cores, idle host,
-# current code — the same sweep the r14 verdict adjudicated), with the
-# two touched composite members replaced by untouched same-family
-# queries. Both old- and new-anchor ratios are emitted for the
-# transition round(s); additions only, nothing removed.
+# Host-drift normalization anchors: per-query min-of-2/3 seconds from
+# the round-14 builder's committed closing sweep at sf0.1 (commit
+# b4cdc29 BENCH_FULL.json: 32 cores, idle host). Cross-round totals are
+# only comparable after dividing by an unchanged subset's ratio — the
+# host's delivered throughput drifts ~10-25% between rounds (SCALE.md
+# "Round-6 finding"). The TPC-H basket rides the join-heavy axis; the
+# composite spans five workload families and takes the MEDIAN of
+# per-query ratios, so one family's host-pressure spike cannot drag the
+# whole normalization.
 _R14_TPCH_ANCHOR = {
     "tpch_q10_returned_items": 0.6532,
     "tpch_q11_important_parts": 0.6299,
@@ -154,6 +102,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
     from betl_spark.contract import QUERIES
     from betl_spark.session import build_spark
@@ -220,43 +169,13 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": cpus,
         "n_queries": len(timings),
         "runs_per_query": N_RUNS,
         "runs_for_short_queries": N_RUNS + 1,
         "short_query_cutoff_sec": SHORT_QUERY_SEC,
         "first_run_total": round(sum(first_pass.values()), 4),
     }
-    # host-drift normalization (see _R4_TPCH_ANCHOR): only meaningful
-    # at the anchor's own scale factor
-    common = [q for q in _R4_TPCH_ANCHOR if q in timings]
-    if sf == 0.1 and common:
-        subset = sum(timings[q] for q in common)
-        anchor = sum(_R4_TPCH_ANCHOR[q] for q in common)
-        payload["tpch_subset_total"] = round(subset, 4)
-        payload["tpch_subset_n"] = len(common)
-        # the ratio is only comparable across rounds on the FULL basket
-        # — a silently shrunken subset would masquerade as host drift
-        if len(common) == len(_R4_TPCH_ANCHOR):
-            ratio = subset / anchor
-            payload["tpch_subset_ratio_vs_r4"] = round(ratio, 4)
-            # PRIMARY cross-round number (round-8 verdict ask): the
-            # total rescaled to the round-4 host's delivered
-            # throughput, so comparisons no longer depend on which
-            # host speed a given round happened to draw (anchors
-            # ranged 0.92-1.26 across r7/r8 on identical-intent code).
-            payload["value_normalized"] = round(payload["value"] / ratio, 4)
-    comp = {q: t for q, t in _R11_COMPOSITE_ANCHOR.items() if q in timings}
-    if sf == 0.1 and len(comp) == len(_R11_COMPOSITE_ANCHOR):
-        ratios = {
-            q: round(timings[q] / t, 4) for q, t in sorted(comp.items())
-        }
-        med = sorted(ratios.values())[len(ratios) // 2]
-        payload["composite_anchor_ratios"] = ratios
-        payload["composite_anchor_ratio_vs_r11"] = med
-        payload["value_normalized_composite"] = round(
-            payload["value"] / med, 4
-        )
-    # re-pinned anchors (round-15 transition: emit BOTH generations)
     common14 = [q for q in _R14_TPCH_ANCHOR if q in timings]
     if sf == 0.1 and len(common14) == len(_R14_TPCH_ANCHOR):
         r14 = sum(timings[q] for q in common14) / sum(
@@ -279,19 +198,21 @@ def main() -> None:
         )
     if errors:
         payload["errors"] = errors
-    # Per-query drift-normalized delta vs the PREVIOUS committed bench
-    # (round-9 verdict ask #4): read the prior BENCH_FULL.json before
-    # overwriting it; each side is rescaled by its own anchor ratio, so
-    # the column separates real regressions from host drift + noise.
+    # Per-query drift-normalized delta vs the PREVIOUS committed bench:
+    # read the prior BENCH_FULL.json before overwriting it; each side is
+    # rescaled by its own anchor ratio, so the column separates real
+    # regressions from host drift + noise. Anchor ratios do not carry
+    # across core counts, so a prior bench on other (or unrecorded)
+    # cores yields no delta.
     prev_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
     )
     try:
         with open(prev_path) as f:
             prev = json.load(f)
-        pr = prev.get("tpch_subset_ratio_vs_r4")
-        cr = payload.get("tpch_subset_ratio_vs_r4")
-        if pr and cr and prev.get("sf") == sf:
+        pr = prev.get("tpch_subset_ratio_vs_r14")
+        cr = payload.get("tpch_subset_ratio_vs_r14")
+        if pr and cr and prev.get("sf") == sf and prev.get("cpus") == cpus:
             deltas = {}
             for q, cur_t in timings.items():
                 pt = prev.get("queries", {}).get(q)
@@ -376,7 +297,6 @@ def main() -> None:
     # the per-query delta dicts are BENCH_FULL-only: inlined they eat
     # the whole stdout budget and evict every actual timing
     compact.pop("normalized_delta_vs_prev", None)
-    compact.pop("composite_anchor_ratios", None)  # BENCH_FULL-only
     compact.pop("composite_anchor_ratios_r14", None)  # BENCH_FULL-only
     n_reg = len(payload.get("normalized_regressions_over_10pct", {}))
     compact.pop("normalized_regressions_over_10pct", None)

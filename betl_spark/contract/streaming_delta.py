@@ -101,9 +101,9 @@ FROM s GROUP BY user_id, sid
 
 
 def q_events_stream_stateful(spark, sf_dir):
-    """Custom stateful operator (applyInPandasWithState): with the whole
-    file set in one availableNow batch, each user emits exactly one
-    update row whose running total is the full per-user aggregate —
+    """Per-user running totals (native streaming aggregate): with the
+    whole file set in one availableNow batch, each user emits exactly
+    one update row whose totals are the full per-user aggregate —
     SQL-checkable. Rounded to 2dp to absorb float summation order."""
     stream = event_stream(spark, f"{sf_dir}/events.parquet")
     out = run_stream_to_table(

@@ -592,19 +592,10 @@ def sorted_neighborhood_pairs(
     ``(window-1) * |vocabulary|``; levenshtein stays JVM-side.
     """
     from betl_spark.defaults.load import assign_surrogate_keys
-    from betl_spark.operators.util import ensure_parallelism
 
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
-    # same treatment as link_records: the rank's range partitioning
-    # mirrors the input's partition count, and a small vocabulary (one
-    # coalesced shuffle output) would otherwise range-partition to ONE
-    # partition. The repartition is a NO-OP at real scale; the probe is
-    # not: over a post-shuffle vocabulary it runs the upstream shuffle
-    # as a hidden job at plan build (see ensure_parallelism)
-    idx = assign_surrogate_keys(
-        ensure_parallelism(names.select("name")), "__rn", ["name"]
-    )
+    idx = assign_surrogate_keys(names.select("name"), "__rn", ["name"])
     probe = idx.select(
         F.col("name").alias("name_a"),
         F.col("__rn").alias("__ra"),

@@ -9,6 +9,7 @@ the standard Structured Streaming shapes:
 - tumbling / sliding window aggregations with event-time watermarks for
   late data;
 - session windows (``session_window``);
+- per-key running totals as a native streaming aggregate;
 - custom stateful processing via ``applyInPandasWithState``.
 
 Testing/verification model: streams are executed with
@@ -31,10 +32,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-#: final StreamingQueryProgress of the last run_stream_to_table call —
-#: diagnostics only (state rows/bytes per provider); None until a run.
-LAST_PROGRESS = None
-#: the full recentProgress list of that run (one entry per micro-batch)
+#: the recentProgress list of the last availableNow run (one
+#: StreamingQueryProgress per micro-batch; the final one is ``[-1]``) —
+#: diagnostics only, a new list per run; None until a run.
 LAST_RECENT_PROGRESS = None
 
 # Fallback when the source path can't be probed (e.g. the directory is
@@ -163,59 +163,49 @@ def sessionize(
     )
 
 
-_STATE_SCHEMA = T.StructType([T.StructField("total", T.DoubleType())])
-_RUNNING_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("events_seen", T.LongType()),
-        T.StructField("running_value", T.DoubleType()),
-    ]
-)
+def stateful_running_totals(events: DataFrame) -> DataFrame:
+    """Per-user running totals as Spark's native streaming aggregate:
+    ``events_seen`` (long) and ``running_value`` (double) per
+    ``user_id``, kept in the JVM state store (``StateStoreSave``) with
+    no Python worker in the path. Run it in ``update`` mode: each
+    micro-batch emits the users it touched with their totals so far.
 
+    Both columns are cumulative across micro-batches. (An earlier
+    ``applyInPandasWithState`` version reset ``events_seen`` to the
+    batch's own row count while ``running_value`` accumulated; a single
+    availableNow batch cannot tell the two apart.)
 
-def stateful_running_totals(
-    events: DataFrame, timeout_minutes: int | None = None
-) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``): per-user
-    running value totals — the reference shape for stateful logic
-    windowed aggs can't express.
-
-    ``timeout_minutes`` enables processing-time state eviction for
-    perpetual streams. It must stay None for availableNow/batch-parity
-    runs: with a timeout configured the micro-batch engine keeps
-    scheduling timeout-check batches and an availableNow query never
-    terminates."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdf_iter, state: GroupState):
-        (user_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        total = state.get[0] if state.exists else 0.0
-        seen = 0
-        for pdf in pdf_iter:
-            seen += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((total,))
-        if timeout_minutes is not None:
-            state.setTimeoutDuration(timeout_minutes * 60 * 1000)
-        yield pd.DataFrame(
-            {"user_id": [user_id], "events_seen": [seen], "running_value": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_RUNNING_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if timeout_minutes is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    The state holds one row per user ever seen and is never evicted.
+    For bounded state on a perpetual stream use
+    :func:`tumbling_window_agg`, whose watermark finalizes and drops
+    old windows."""
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("events_seen"),
+        F.sum("value").alias("running_value"),
     )
+
+
+def _run_available_now(
+    writer, spark: SparkSession, state_partitions: int | None
+) -> None:
+    """Drain every available input through ``writer`` in availableNow
+    micro-batches and record the run's progress in
+    ``LAST_RECENT_PROGRESS``.
+
+    ``state_partitions`` sets ``spark.sql.shuffle.partitions`` for the
+    lifetime of the query (the value is frozen into the query's state
+    store layout at start) and restores it afterwards."""
+    global LAST_RECENT_PROGRESS
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if state_partitions is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    try:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        LAST_RECENT_PROGRESS = list(q.recentProgress)
+    finally:
+        if state_partitions is not None:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_stream_to_table(
@@ -231,12 +221,10 @@ def run_stream_to_table(
     stream processes the same files a batch read would, so its final
     table must equal the batch aggregation.
 
-    ``state_partitions`` sets ``spark.sql.shuffle.partitions`` for the
-    lifetime of the query (the value is frozen into the query's state
-    store layout at start). Stateful operators pay a per-partition
-    state-store commit on every micro-batch, so this should track the
-    cluster: O(cores) on a real cluster, small (e.g. 8) for local runs
-    over modest data. Results are partition-count-invariant.
+    Stateful operators pay a per-partition state-store commit on every
+    micro-batch, so ``state_partitions`` should track the cluster:
+    O(cores) on a real cluster, small (e.g. 8) for local runs over
+    modest data. Results are partition-count-invariant.
     """
     import os
     import shutil
@@ -244,9 +232,6 @@ def run_stream_to_table(
 
     spark = stream_df.sparkSession
     name = f"{table_prefix}_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # checkpoint + state store on tmpfs when available: the state commit
     # per micro-batch is fsync-bound on disk, pure memcpy on /dev/shm.
     # (A production stream checkpoints to durable storage by definition —
@@ -254,27 +239,14 @@ def run_stream_to_table(
     ckpt_root = "/dev/shm" if os.path.isdir("/dev/shm") else None
     ckpt = tempfile.mkdtemp(prefix="betl_ckpt_", dir=ckpt_root)
     try:
-        q = (
+        writer = (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
-        # diagnostics hook: the final progress (state-store rows/bytes,
-        # per-batch durations) for harnesses that compare state-store
-        # providers — the query object itself never leaves this scope.
-        # LAST_RECENT_PROGRESS keeps the per-micro-batch trail so
-        # multi-batch runs (maxFilesPerTrigger) can report per-commit
-        # overhead, not just the final snapshot.
-        global LAST_PROGRESS, LAST_RECENT_PROGRESS
-        LAST_PROGRESS = q.lastProgress
-        LAST_RECENT_PROGRESS = q.recentProgress
+        _run_available_now(writer, spark, state_partitions)
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
@@ -337,23 +309,13 @@ def run_stream_to_parquet(
     the file sink supports append mode only — aggregations need a
     watermark so windows finalize and append.
     """
-    spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", output_path)
-            .option("checkpointLocation", checkpoint_path)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    writer = (
+        stream_df.writeStream.format("parquet")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode(output_mode)
+    )
+    _run_available_now(writer, stream_df.sparkSession, state_partitions)
 
 
 def stream_static_enrich(

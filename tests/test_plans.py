@@ -330,6 +330,18 @@ def test_boilerplate_removal_has_no_cartesian(spark):
     assert all(j == "BroadcastNestedLoopJoin" for j in nlj)
 
 
+def test_stateful_running_totals_is_a_native_state_store_aggregate(spark):
+    """Per-user running totals stay in the JVM: a native streaming
+    aggregate whose state operator is StateStoreSave, with no Python
+    state operator and no Python eval node."""
+    from betl_spark.streaming import event_stream, stateful_running_totals
+
+    p = plan(stateful_running_totals(event_stream(spark, f"{SF}/events.parquet")))
+    assert "StateStoreSave" in p, p
+    assert "FlatMapGroupsInPandasWithState" not in p, p
+    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
+
+
 def test_round9_queries_have_no_cartesian_or_python_eval(spark):
     """The round-9 breadth family: no cross products (the 1-row
     bounds/totals crossJoins plan as broadcast nested loops over ONE
@@ -852,13 +864,23 @@ def test_snm_union_no_cartesian_no_single_partition_window(spark):
     no cartesian anywhere, the SNM rank still rides range
     partitioning (never a one-reducer Window), JVM-side throughout."""
     from betl_spark.contract.round13 import q_er_snm_union_pairs
+    from betl_spark.operators import linkage
 
     p = plan(q_er_snm_union_pairs(spark, SF))
     assert "CartesianProduct" not in p, p
-    assert "SinglePartition" not in p, p
     assert "Window" not in p, p
-    assert "rangepartitioning" in p.lower(), p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p, p
+    # the sf0.001 vocabulary coalesces to one partition, where the rank's
+    # range shuffle is legitimately a one-partition (SinglePartition)
+    # exchange — over a multi-partition vocabulary it must range-partition
+    vocab = (
+        spark.read.parquet(f"{SF}/customer.parquet")
+        .select(F.col("c_name").alias("name"))
+        .repartition(8)
+    )
+    p = plan(linkage.sorted_neighborhood_pairs(vocab, window=5, threshold=2))
+    assert "SinglePartition" not in p, p
+    assert "rangepartitioning" in p.lower(), p
 
 
 def test_3day_chain_no_cartesian_no_python(spark):

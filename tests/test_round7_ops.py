@@ -212,7 +212,12 @@ def test_bench_anchor_queries_still_registered():
     import bench
     from betl_spark.contract import QUERIES
 
-    missing = [q for q in bench._R4_TPCH_ANCHOR if q not in QUERIES]
+    names = (
+        set(bench._R14_TPCH_ANCHOR)
+        | set(bench._R14_COMPOSITE_ANCHOR)
+        | bench._R14_INLINED
+    )
+    missing = sorted(q for q in names if q not in QUERIES)
     assert missing == [], missing
 
 

@@ -167,6 +167,7 @@ def test_stream_to_parquet_is_incremental_exactly_once(spark, tmp_path):
     import shutil
 
     from betl_spark.streaming import event_stream, run_stream_to_parquet
+    from betl_spark.streaming import events as ev
 
     src = tmp_path / "events_src"
     src.mkdir()
@@ -182,10 +183,15 @@ def test_stream_to_parquet_is_incremental_exactly_once(spark, tmp_path):
     run_stream_to_parquet(stream, out, ckpt, state_partitions=4)
     n1 = spark.read.parquet(out).count()
     assert n1 == half1.count()
+    # the file-sink path records its micro-batch progress too, as a
+    # fresh list per run
+    first = ev.LAST_RECENT_PROGRESS
+    assert sum(p.numInputRows for p in first) == n1
 
     # same checkpoint, no new files -> nothing reprocessed
     run_stream_to_parquet(stream, out, ckpt, state_partitions=4)
     assert spark.read.parquet(out).count() == n1
+    assert ev.LAST_RECENT_PROGRESS is not first
 
     events.filter("event_id % 2 = 1").coalesce(1).write.mode("overwrite").parquet(
         str(tmp_path / "h2")
@@ -294,9 +300,9 @@ def test_stream_stream_join_equals_batch(spark):
 
 
 def test_run_stream_records_last_progress(spark):
-    """The LAST_PROGRESS diagnostics hook: after a run the module
-    holds the final StreamingQueryProgress with state-operator
-    metrics (what the state-store provider comparison harness reads)."""
+    """The progress diagnostics hook: after a run the module holds the
+    run's micro-batch progress list; its last entry carries the
+    state-operator metrics."""
     import json
 
     from betl_spark.streaming import events as ev
@@ -307,12 +313,50 @@ def test_run_stream_records_last_progress(spark):
         output_mode="update",
         table_prefix="prog_out",
     )
-    prog = ev.LAST_PROGRESS
-    assert prog is not None
+    assert ev.LAST_RECENT_PROGRESS
+    prog = ev.LAST_RECENT_PROGRESS[-1]
     if not isinstance(prog, dict):
         prog = json.loads(prog.json)
     ops = prog.get("stateOperators")
     assert ops and ops[0].get("numRowsTotal", 0) > 0
+
+
+def test_stateful_running_totals_cumulative_across_micro_batches(spark, tmp_path):
+    """Both totals accumulate across micro-batches: with the events
+    split over two files read one file per trigger, every user's
+    largest emitted ``events_seen`` and ``running_value`` equal the
+    batch count and sum over all files (a user seen in both files must
+    not report only one batch's count)."""
+    from betl_spark.streaming import events as ev
+
+    events = spark.read.parquet(EVENTS)
+    src = str(tmp_path / "events_src")
+    for part in ("event_id % 2 = 0", "event_id % 2 = 1"):
+        events.filter(part).coalesce(1).write.mode("append").parquet(src)
+    stream = event_stream(spark, src, max_files_per_trigger=1)
+    out = run_stream_to_table(
+        stateful_running_totals(stream),
+        output_mode="update",
+        table_prefix="multi_out",
+        state_partitions=4,
+    )
+    assert len(ev.LAST_RECENT_PROGRESS) >= 2  # really ran multi-batch
+    got = {
+        r.user_id: (r.n, r.total)
+        for r in out.groupBy("user_id")
+        .agg(F.max("events_seen").alias("n"), F.max("running_value").alias("total"))
+        .collect()
+    }
+    want = {
+        r.user_id: (r.n, r.total)
+        for r in events.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total"))
+        .collect()
+    }
+    assert set(got) == set(want)
+    for uid, (n, total) in want.items():
+        assert got[uid][0] == n, uid
+        assert abs(got[uid][1] - total) < 1e-6, uid
 
 
 def test_stateful_running_totals_rocksdb_provider_parity(spark):
