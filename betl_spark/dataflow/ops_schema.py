@@ -6,7 +6,8 @@ from __future__ import annotations
 
 from typing import Any, Callable
 
-from pyspark.sql import Column as SparkCol, DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column as SparkCol, DataFrame, functions as F, types as T
+from pyspark.sql.internal import InternalFunction
 
 from betl_spark.config import AUDIT_COL_NAMES
 
@@ -25,10 +26,9 @@ def _add_positional_column(
     order — fine for the reference's use (small lookup/config frames),
     meaningless for big distributed data, so inputs beyond ``max_rows``
     are rejected with a clear error instead of silently running a global
-    sort. Row position = row_number() over monotonically_increasing_id(),
-    which reproduces zipWithIndex's partition-then-offset order entirely
-    JVM-side (no Python RDD round-trip); the single-partition window sort
-    is acceptable under the row cap.
+    sort. Row position = Spark's distributed sequence id: zipWithIndex's
+    partition-then-offset order, entirely JVM-side (no Python RDD
+    round-trip, no single-partition window).
     """
     n = df.count()
     if len(values) != n:
@@ -42,8 +42,7 @@ def _add_positional_column(
             "config/lookup frames; join on a real key instead"
         )
     spark = df.sparkSession
-    w = Window.orderBy(F.monotonically_increasing_id())
-    left = df.withColumn("__pos__", F.row_number().over(w) - 1)
+    left = df.withColumn("__pos__", InternalFunction.distributed_sequence_id())
     right = spark.createDataFrame(
         [(i, v) for i, v in enumerate(values)], schema=["__pos__", name]
     )

@@ -138,7 +138,7 @@ def scd2_apply(
     new_src = changes.filter(F.col(CHANGE_COL).isin("INSERT", "UPDATE")).drop(
         CHANGE_COL
     )
-    max_sk = prev_dim.agg(F.max(sk_col)).first()[0] or 0
+    max_sk = F.coalesce(prev_dim.select(F.max(sk_col)).scalar(), F.lit(0))
     new_versions = (
         assign_surrogate_keys(new_src, sk_col, nk_cols, offset=max_sk)
         .withColumn("valid_from", F.lit(batch_id).cast("long"))
@@ -203,8 +203,9 @@ def delta_load_dimension(
       whole dimension stays reproducible by an independent engine).
 
     Scale shape: one NK-shuffled join of the two snapshots (the same
-    partitioning a Delta/Iceberg MERGE INTO would use), one scalar
-    max(sk) job, and SK assignment over only the INSERT slice — the
+    partitioning a Delta/Iceberg MERGE INTO would use), and SK
+    assignment over only the INSERT slice, offset by a max(sk) scalar
+    subquery that runs with the query, not at plan build — the
     incremental cost is O(changes), not O(dimension), aside from the
     snapshot join itself.
     """
@@ -223,7 +224,7 @@ def delta_load_dimension(
         .join(sk_map, on=list(nk_cols), how="inner")
     )
     inserts = changes.filter(F.col(CHANGE_COL) == "INSERT").drop(CHANGE_COL)
-    max_sk = prev_dim.agg(F.max(sk_col)).first()[0] or 0
+    max_sk = F.coalesce(prev_dim.select(F.max(sk_col)).scalar(), F.lit(0))
     new_rows = assign_surrogate_keys(inserts, sk_col, nk_cols, offset=max_sk)
     order = [sk_col, *nk_cols, *attr_cols]
     return existing.select(order).unionByName(new_rows.select(order))

@@ -8,17 +8,12 @@ stageLoad.py:184-316) with a deterministic distributed assignment:
 **SK assignment** = dense sequential longs in natural-key order.
 A naive ``row_number() OVER (ORDER BY nk)`` forces the whole dimension
 through ONE partition — fine at 60k rows, a bottleneck at 100M. Instead
-we do the scalable two-pass pattern:
-
-1. globally range-partition + sort by the NK (``repartitionByRange`` +
-   ``sortWithinPartitions`` — the same machinery as a distributed
-   ORDER BY);
-2. count rows per partition (one lightweight job);
-3. number each partition sequentially from its cumulative offset.
-
-The result is bit-identical to ``row_number() OVER (ORDER BY nk)`` —
-which is exactly what the DuckDB oracle runs — while every partition
-numbers its slice independently.
+the dimension is range-partitioned and sorted by the NK (the machinery
+of a distributed ORDER BY), and Spark's own distributed sequence
+(``AttachDistributedSequence``, the zipWithIndex behind pandas-on-Spark's
+default index) numbers the sorted partitions in order. The result equals
+``row_number() OVER (ORDER BY nk)`` — which is exactly what the DuckDB
+oracle runs — and building the plan launches no Spark job.
 
 **Fact FK resolution** (stageLoad.py:361-409) = per-FK broadcast left
 join against the dim's SK/NK map, unmatched → −1. Dim key maps are
@@ -30,7 +25,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql.internal import InternalFunction
 
 from betl_spark.dataflow.audit import collapse_audit_cols_to_nk
 from betl_spark.io.readers import local_rows, read_staged
@@ -45,61 +41,26 @@ def assign_surrogate_keys(
     df: DataFrame,
     sk_col: str,
     order_cols: list[str],
-    offset: int = 0,
+    offset: int | Column = 0,
 ) -> DataFrame:
     """Dense sequential SKs in ``order_cols`` order, starting at
     ``offset + 1`` (Postgres SERIAL parity: stageLoad.py:184-316,
     ColumnClass.py:29-31). ``order_cols`` must be a unique key or
     numbering within ties is undefined — same caveat as any ORDER BY.
+    ``offset`` may be a Column (e.g. a scalar ``max(sk)`` subquery), so
+    an incremental load needs no driver round trip.
 
-    Entirely JVM-side, ONE shuffle total, no single-reducer stage:
-
-    1. range-partition + sort by the key (the distributed ORDER BY
-       machinery) and stamp ``monotonically_increasing_id()`` — whose
-       low 33 bits are by contract the 0-based row index WITHIN the
-       partition (consecutive, in partition row order — i.e. the sort
-       order) and whose high bits are the partition id;
-    2. one lightweight count-per-partition job (map-side combine: only
-       n_partitions rows cross the wire);
-    3. the SK is then a pure PROJECTION: cumulative partition offset +
-       local index + 1. No window at all — a ``row_number() OVER
-       (PARTITION BY pid)`` here would force a second full shuffle,
-       because Catalyst can't see that the data is already grouped by
-       its own partition id.
-
-    Range partitions are ordered, so the result is bit-identical to
-    ``row_number() OVER (ORDER BY key)`` — which is exactly what the
-    DuckDB oracle runs — while every partition numbers independently.
-    (A naive global window would squeeze the whole dimension through
-    one partition; a Python-RDD zipWithIndex would pickle every row
-    through Python workers. Both lose badly at 100M+ rows.)
+    One range shuffle, no single-reducer stage, no job at plan build:
+    range partitions are ordered (AQE only coalesces contiguous ones)
+    and sorted within, so the distributed sequence — partition index
+    first, then row order — is the global key order.
+    ``AttachDistributedSequenceExec`` persists the sorted rows for its
+    count pass, releases them when the query ends, and a retried task
+    re-reads the same rows.
     """
-    n_part = max(df.rdd.getNumPartitions(), 1)
-    mid_pid = F.shiftrightunsigned(F.col("__mid"), 33).cast("int")
-    mid_local = F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
-    ranged = (
-        df.repartitionByRange(n_part, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn("__mid", F.monotonically_increasing_id())
-        .persist()
-    )
-    counts = {
-        r["p"]: r["n"]
-        for r in ranged.groupBy(mid_pid.alias("p")).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = {}, offset
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_expr = F.element_at(
-        F.create_map(*[F.lit(x) for pid in sorted(offsets) for x in (pid, offsets[pid])]),
-        mid_pid,
-    ) if offsets else F.lit(offset)
-    out = ranged.withColumn(
-        sk_col,
-        (offset_expr.cast("long") + mid_local + F.lit(1).cast("long")),
-    ).drop("__mid")
-    return out.select(sk_col, *df.columns)
+    ranged = df.repartitionByRange(*order_cols).sortWithinPartitions(*order_cols)
+    sk = F.lit(offset).cast("long") + InternalFunction.distributed_sequence_id() + 1
+    return ranged.select(sk.alias(sk_col), *df.columns)
 
 
 def default_rows_df(spark, schema: T.StructType, sk_col: str, rows: list[dict]) -> DataFrame:
@@ -140,8 +101,8 @@ def sk_nk_map(dim: DataFrame, sk_col: str, nk_cols: list[str]) -> DataFrame:
 def bulk_load_dimension(pipeline, table: Table, default_rows: list[dict] | None = None) -> None:
     """Truncate-and-reload a dimension (reference stageLoad.py:184-316):
     LOD staging → typed columns → SK assignment from 1 → default rows
-    appended with negative SKs → BSE write → SK/NK map staged to LOD as
-    ``sk_<dim>`` for the fact loads."""
+    appended with negative SKs → BSE write → SK/NK map of the written
+    table staged to LOD as ``sk_<dim>`` for the fact loads."""
     spark = pipeline.spark
     sk = table.sk_col
     nks = [c.name for c in table.nk_cols]
@@ -165,9 +126,12 @@ def bulk_load_dimension(pipeline, table: Table, default_rows: list[dict] | None 
             {sk.name: UNRECOGNISED_SK, "_label": "UNRECOGNISED"},
         ]
     dim = dim.unionByName(default_rows_df(spark, dim.schema, sk.name, default_rows))
-    write_staged(dim, pipeline.conf.layer_path("BSE", table.name))
+    bse_path = pipeline.conf.layer_path("BSE", table.name)
+    write_staged(dim, bse_path)
+    # the key map is read back from the table just written, as the
+    # reference does, so the two writes agree without caching ``dim``
     write_staged(
-        sk_nk_map(dim, sk.name, nks),
+        sk_nk_map(read_staged(spark, bse_path, all_string=False), sk.name, nks),
         pipeline.conf.layer_path("LOD", f"sk_{table.name}"),
     )
 

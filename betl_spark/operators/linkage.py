@@ -584,11 +584,13 @@ def sorted_neighborhood_pairs(
     candidate budget, not recall, is the binding constraint.
 
     Plan shape (the 100 TB contract): the global rank comes from the
-    SK engine's range-partition + per-partition numbering
-    (``defaults/load.py:assign_surrogate_keys`` — ONE range shuffle,
-    no ``row_number() OVER (ORDER BY ...)`` single-partition window),
-    and neighbor pairing is ``explode(sequence(1, window-1))`` + ONE
-    equi-join on the shifted rank. Candidates never exceed
+    SK engine (``defaults/load.py:assign_surrogate_keys`` — ONE range
+    shuffle numbered by Spark's distributed sequence, no
+    ``row_number() OVER (ORDER BY ...)`` single-partition window). Both
+    sides of the self-join number the vocabulary independently and
+    agree because the names are distinct. Neighbor pairing is
+    ``explode(sequence(1, window-1))`` + ONE equi-join on the shifted
+    rank. Candidates never exceed
     ``(window-1) * |vocabulary|``; levenshtein stays JVM-side.
     """
     from betl_spark.defaults.load import assign_surrogate_keys

@@ -56,8 +56,7 @@ def ranked_running_sum(
     n_bands: int | None = None,
 ) -> DataFrame:
     """Global rank + running sum of ``value_col`` in ``order_cols``
-    order, with NO partition-less Window — the banded two-pass pattern
-    (same machinery as the SK engine, defaults/load.py:44):
+    order, with NO partition-less Window — the banded two-pass pattern:
 
     1. range-partition by the order key: bands are ordered, rows sort
        within bands in parallel;

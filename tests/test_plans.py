@@ -129,27 +129,27 @@ def test_ngram_jaccard_contract_query_has_no_cross_product(spark):
 
 def test_sk_engine_has_no_single_partition_exchange(spark):
     """The hardest-won plan property of the SK engine: surrogate keys
-    are assigned with a range-partition + per-partition numbering —
-    never a global window that funnels the dimension through one
+    are assigned with a range-partition + Spark's distributed sequence
+    — never a global window that funnels the dimension through one
     reducer (an Exchange SinglePartition node)."""
     from betl_spark.defaults.load import assign_surrogate_keys
 
-    # sf0.001 reads as one partition, where repartitionByRange(1) is
-    # legitimately a SinglePartition exchange — pre-split to 8 so the
-    # plan shows the real multi-partition shape a cluster would run
-    customer = (
-        spark.read.parquet(f"{SF}/customer.parquet")
-        .select(
-            F.col("c_custkey").cast("string").alias("nk_customer"),
-            F.col("c_name").alias("attr_name"),
-        )
-        .repartition(8)
+    # the range exchange takes the session's shuffle partitions (4 in
+    # tests), not the input's, so even one-file sf0.001 shows the
+    # multi-partition shape a cluster would run
+    customer = spark.read.parquet(f"{SF}/customer.parquet").select(
+        F.col("c_custkey").cast("string").alias("nk_customer"),
+        F.col("c_name").alias("attr_name"),
     )
     p = plan(assign_surrogate_keys(customer, "sk_customer", ["nk_customer"]))
     assert "SinglePartition" not in p, p
     assert "rangepartitioning" in p.lower(), p
-    # the SK is a projection over the cached ranged data — re-windowing
-    # by partition id would add a second full Exchange after the cache
+    # the SK is a projection over Spark's own sequence, which releases
+    # its cached input when the query ends; a cache in the plan or a
+    # re-window by partition id would add work after the range shuffle.
+    # Fails loudly if a PySpark upgrade drops the internal function.
+    assert "AttachDistributedSequence" in p, p
+    assert "InMemoryRelation" not in p, p
     assert "Window" not in p, p
 
 
