@@ -40,6 +40,7 @@ from betl_spark.contract.linkage import (
     records_frame,
 )
 from betl_spark.operators import linkage
+from betl_spark.operators.util import materialize
 
 QUERIES: dict = {}
 
@@ -260,24 +261,17 @@ def _day2_and_labels(spark, sf_dir):
     recs = records_frame(spark, sf_dir)
     day1 = recs.where(F.col("doc_id") % 2 == 0)
     day2 = recs.where(F.col("doc_id") % 2 == 1)
-    labels1 = (
+    # the frozen map is referenced ~4x inside incremental_cluster_assign
+    # — materialize the vocabulary-grain frame once or each reference
+    # re-runs the day-1 clustering (round-13 chain lesson; at scale
+    # yesterday's map is a persisted table by definition)
+    labels1 = materialize(
         linkage.cluster_records(
             day1, record_id="doc_id", record_name="name", threshold=THRESHOLD
         )
         .select("name", "cluster_id")
-        .distinct()
-        # the frozen map is referenced ~4x inside
-        # incremental_cluster_assign — materialize the
-        # vocabulary-grain frame once or each reference re-runs the
-        # day-1 clustering (round-13 chain lesson; at scale
-        # yesterday's map is a persisted table by definition).
-        # localCheckpoint(eager) rather than persist(): persist
-        # registers in the CacheManager and is never released by the
-        # harness, so across a 200+-query sweep the cached maps
-        # accumulate in executor storage memory (round-13 advisor);
-        # checkpoint blocks are ContextCleaner-reclaimed as soon as
-        # the frame goes out of scope after the query materializes.
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     return day2, labels1
 

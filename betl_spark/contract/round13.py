@@ -68,6 +68,7 @@ from betl_spark.contract.linkage import (
 )
 from betl_spark.contract.round12 import _vocab_pair_ctes
 from betl_spark.operators import linkage
+from betl_spark.operators.util import materialize
 
 QUERIES: dict = {}
 
@@ -359,14 +360,13 @@ def q_er_skew_method_census(spark, sf_dir):
     SNM's sort-window escapes; SNM-only mass is pairs sharing neither
     tagged prefix. The census is the measured basis for the operating
     rule (union both) documented in sorted_neighborhood_pairs."""
-    vocab = (
+    # both pair generators (blocked + SNM) read the vocabulary;
+    # materialize the generated corpus + distinct once
+    vocab = materialize(
         growing_records_frame(spark, sf_dir, skew=True)
         .select(F.lower(F.trim("name")).alias("name"))
         .where(F.col("name").isNotNull())
         .distinct()
-        # both pair generators (blocked + SNM) read the vocabulary;
-        # materialize the generated corpus + distinct once
-        .localCheckpoint(eager=False)
     )
     bp = linkage.fuzzy_name_pairs(vocab, THRESHOLD).withColumn(
         "in_blocked", F.lit(True)
@@ -438,28 +438,23 @@ def q_er_3day_chain(spark, sf_dir):
     # cross pairs, final union) — materialize the vocabulary-grain map
     # at every chain boundary or each reference re-executes the whole
     # prior-day chain multiplicatively (measured 18.4s -> see SCALE.md;
-    # at 100 TB the daily map is a PERSISTED table by definition).
-    # localCheckpoint(eager) rather than persist(): persist registers
-    # in the CacheManager and the harness never unpersists, so cached
-    # maps accumulate across the 200+-query bench sweep (round-13
-    # advisor); checkpoint blocks are ContextCleaner-reclaimed once
-    # the frames go out of scope, and the truncated lineage is exactly
-    # the "frozen table" semantics the chain models.
-    lab0 = (
+    # at 100 TB the daily map is a PERSISTED table by definition). The
+    # truncated lineage is exactly the "frozen table" semantics the
+    # chain models.
+    lab0 = materialize(
         linkage.cluster_records(
             d0, record_id="doc_id", record_name="name", threshold=THRESHOLD
         )
         .select("name", "cluster_id")
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     out1 = linkage.incremental_cluster_assign(
         d1, lab0, record_id="doc_id", record_name="name", threshold=THRESHOLD
     )
-    lab1 = (
-        lab0.unionByName(out1.select("name", "cluster_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    lab1 = materialize(
+        lab0.unionByName(out1.select("name", "cluster_id")).distinct(),
+        eager=True,
     )
     out2 = linkage.incremental_cluster_assign(
         d2,

@@ -18,6 +18,7 @@ from betl_spark.contract.scale import (
     _CELL_COS,
     _COSINE_PAIR,
 )
+from betl_spark.operators.util import materialize
 
 SEMANTIC_THRESHOLD = 0.3
 
@@ -1105,15 +1106,14 @@ def q_corpus_curation_v2(spark, sf_dir):
         "ppl",
         group_cols=["lang"],
     ).filter(F.col("bucket") != "tail")
-    kept = (
+    # two consumers (mixture_sample's strata-count collect + the
+    # returned filter plan): materialize so the classifier+LM+quantile
+    # pipeline runs ONCE, not per consumer (the semantic_dedup
+    # `assigned` discipline)
+    kept = materialize(
         docs.select("doc_id", "lang")
         .join(clf.select("doc_id"), "doc_id")
         .join(ppl.select("doc_id"), "doc_id")
-        # two consumers (mixture_sample's strata-count collect + the
-        # returned filter plan): checkpoint so the classifier+LM+
-        # quantile pipeline runs ONCE, not per consumer (the
-        # semantic_dedup `assigned` discipline)
-        .localCheckpoint(eager=False)
     )
     return sampling.mixture_sample(kept, "doc_id", "lang", MIX_WEIGHTS).select(
         "doc_id", "lang"

@@ -13,6 +13,7 @@ generator-in-lockstep pattern as round 7's ``_bpe_train_sql``).
 from __future__ import annotations
 
 from betl_spark.contract.common import table
+from betl_spark.operators.util import materialize
 
 CLF_TRAIN_BUCKETS = 256
 CLF_TRAIN_ITERS = 3
@@ -144,15 +145,17 @@ def q_classifier_train_score(spark, sf_dir):
     from betl_spark.operators.quality import classifier_score, classifier_train
 
     docs = table(spark, sf_dir, "documents")
-    w = classifier_train(
-        docs,
-        "doc_id",
-        "text",
-        F.col("lang") == F.lit("en"),
-        buckets=CLF_TRAIN_BUCKETS,
-        iterations=CLF_TRAIN_ITERS,
-        lr=CLF_TRAIN_LR,
-    ).localCheckpoint(eager=False)
+    w = materialize(
+        classifier_train(
+            docs,
+            "doc_id",
+            "text",
+            F.col("lang") == F.lit("en"),
+            buckets=CLF_TRAIN_BUCKETS,
+            iterations=CLF_TRAIN_ITERS,
+            lr=CLF_TRAIN_LR,
+        )
+    )
     # empty corpus -> empty weight table -> untrained bias 0 (the
     # oracle's scalar subquery yields NULL + COALESCE downstream; both
     # produce zero output rows on zero documents)
@@ -666,13 +669,17 @@ def q_corpus_curation_v3(spark, sf_dir):
     )
     # three consumers (trainer, scorer, lang join) — materialize the
     # span-trim pipeline once
-    cleaned = trim_spans(docs, spans, "doc_id", "text").select(
-        "doc_id", "lang", "text_clean"
-    ).localCheckpoint(eager=False)
-    w = classifier_train(
-        cleaned, "doc_id", "text_clean", F.col("lang") == F.lit("en"),
-        buckets=CLF_TRAIN_BUCKETS, iterations=V3_ITERS, lr=CLF_TRAIN_LR,
-    ).localCheckpoint(eager=False)
+    cleaned = materialize(
+        trim_spans(docs, spans, "doc_id", "text").select(
+            "doc_id", "lang", "text_clean"
+        )
+    )
+    w = materialize(
+        classifier_train(
+            cleaned, "doc_id", "text_clean", F.col("lang") == F.lit("en"),
+            buckets=CLF_TRAIN_BUCKETS, iterations=V3_ITERS, lr=CLF_TRAIN_LR,
+        )
+    )
     rows = w.filter("bucket = -1").collect()
     bias = rows[0]["w"] if rows else 0.0
     scored = classifier_score(
@@ -820,9 +827,12 @@ def q_semantic_ingest_2day(spark, sf_dir):
     similarity.build_ivf_index(
         corpus, "vec_id", "embedding", IVF_CENTROID_IDS, path
     )
-    s1 = similarity.semantic_dedup_incremental(
-        spark, day1, path, "vec_id", "embedding", threshold=SEMANTIC_THRESHOLD
-    ).localCheckpoint(eager=True)
+    s1 = materialize(
+        similarity.semantic_dedup_incremental(
+            spark, day1, path, "vec_id", "embedding", threshold=SEMANTIC_THRESHOLD
+        ),
+        eager=True,
+    )
     similarity.append_to_ivf_index(
         spark, day1.join(s1.select("vec_id"), "vec_id"), path,
         "vec_id", "embedding",

@@ -46,7 +46,10 @@ from __future__ import annotations
 
 from collections import Counter
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
+
+from betl_spark.io.readers import local_rows
+from betl_spark.operators.util import materialize_tracked, release
 
 SYM = "\x1f"  # symbol sentinel (unit separator)
 BND = "\x1e"  # word boundary (record separator)
@@ -112,14 +115,6 @@ def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-def bpe_encoded(text_col: str, merges: list[tuple[str, str]] | None = None) -> F.Column:
-    """The sentinel-encoded symbol string after all merges — exposed
-    for debugging/tests; ``bpe_token_count`` is the production column.
-    ``text_col`` is a column NAME (the expression is built as one SQL
-    string, same pattern as similarity.hyperplane_signs)."""
-    return F.expr(_encoded_expr(text_col, merges))
-
-
 def _encoded_expr(text_col: str, merges: list[tuple[str, str]] | None) -> str:
     if merges is None:
         merges = DEFAULT_MERGES
@@ -160,42 +155,6 @@ def _pair_counts(words) -> "F.DataFrame":
         .groupBy("x", "y")
         .agg(F.sum("freq").alias("c"))
     )
-
-
-def _persistent_rdd_ids(spark) -> set:
-    """IDs of the RDDs currently persisted in this context's block
-    manager (the Scala ``SparkContext.getPersistentRDDs`` map iterated
-    via py4j — ``JavaSparkContext`` exposes no accessor)."""
-    ids = set()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        ids.add(it.next()._1())
-    return ids
-
-
-def _checkpoint_tracked(df, spark):
-    """``localCheckpoint(eager=True)`` plus the ids of the RDD blocks
-    it pinned, so the caller can later free EXACTLY those blocks.
-
-    ``df.rdd.unpersist()`` cannot do this job: ``DataFrame.rdd``
-    constructs a fresh Java→Python mapped RDD (storage level NONE)
-    on every access, not the checkpointed RDD, so unpersisting it
-    is a no-op and a long merge loop would accumulate two
-    vocab-sized cached tables per round."""
-    before = _persistent_rdd_ids(spark)
-    out = df.localCheckpoint(eager=True)
-    return out, _persistent_rdd_ids(spark) - before
-
-
-def _unpersist_ids(spark, ids) -> None:
-    """Drop exactly the tracked checkpoint blocks (non-blocking)."""
-    if not ids:
-        return
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        t = it.next()
-        if t._1() in ids:
-            t._2().unpersist(False)
 
 
 def train_merges_distributed(
@@ -273,19 +232,17 @@ def train_merges_distributed(
         #   task closures grow without bound;
         # - the previous round's cached tables are dead once the new
         #   ones materialize — unpersist them or a 50k-merge run leaks
-        #   2 vocab-sized cached tables per round. The blocks are
-        #   tracked by RDD id (_checkpoint_tracked) because
-        #   DataFrame.rdd.unpersist is a no-op for checkpoint blocks.
-        words, _w_ids = _checkpoint_tracked(words, spark)
+        #   2 vocab-sized cached tables per round.
+        words, _w_ids = materialize_tracked(words)
         n_parts = words.rdd.getNumPartitions()
-        pairs, _p_ids = _checkpoint_tracked(_pair_counts(words), spark)
+        pairs, _p_ids = materialize_tracked(_pair_counts(words))
         live_ids = _w_ids | _p_ids
     else:
         pairs = None
         # full mode re-scans the word table every round — checkpoint it
         # (tracked, so the final cleanup frees it) or each round replays
         # the corpus scan + groupBy
-        words, live_ids = _checkpoint_tracked(words, spark)
+        words, live_ids = materialize_tracked(words)
     for _ in range(n_merges):
         t0 = _time.perf_counter()
         if mode == "full":
@@ -304,10 +261,10 @@ def train_merges_distributed(
         ).alias("enc")
         if mode == "full":
             old_ids = live_ids
-            words, live_ids = _checkpoint_tracked(
-                words.select(apply_merge, "freq"), spark
+            words, live_ids = materialize_tracked(
+                words.select(apply_merge, "freq")
             )
-            _unpersist_ids(spark, old_ids)
+            release(spark, old_ids)
             if round_seconds is not None:
                 round_seconds.append(_time.perf_counter() - t0)
             continue
@@ -315,34 +272,35 @@ def train_merges_distributed(
         affected = words.filter(F.col("enc").contains(pat))
         merged = affected.select(apply_merge, "freq")
         old_ids = live_ids
-        pairs, _p_ids = _checkpoint_tracked(
+        pairs, _p_ids = materialize_tracked(
             pairs.unionByName(
                 _pair_counts(affected).select("x", "y", (-F.col("c")).alias("c"))
             )
             .unionByName(_pair_counts(merged))
             .groupBy("x", "y")
             .agg(F.sum("c").alias("c"))
-            .filter(F.col("c") > 0),
-            spark,
+            .filter(F.col("c") > 0)
         )
-        words, _w_ids = _checkpoint_tracked(
+        words, _w_ids = materialize_tracked(
             words.filter(~F.col("enc").contains(pat))
             .unionByName(merged)
-            .coalesce(n_parts),
-            spark,
+            .coalesce(n_parts)
         )
         live_ids = _p_ids | _w_ids
         # the new tables are materialized — the previous round's blocks
         # are unreachable, free them NOW (not at GC's leisure)
-        _unpersist_ids(spark, old_ids)
+        release(spark, old_ids)
         if round_seconds is not None:
             round_seconds.append(_time.perf_counter() - t0)
     # the merges are collected; the loop's working tables are dead —
     # leave the block manager exactly as we found it
-    _unpersist_ids(spark, live_ids)
-    return spark.createDataFrame(
+    release(spark, live_ids)
+    return local_rows(
+        spark,
         [(i + 1, x, y, c) for i, (x, y, c) in enumerate(merges)],
-        "merge_rank int, x string, y string, pair_count long",
+        T.StructType.fromDDL(
+            "merge_rank int, x string, y string, pair_count long"
+        ),
     )
 
 

@@ -785,7 +785,7 @@ def ngram_novelty(
     aggregation formulation dissolves the hot key instead: MIN and
     COUNT are map-side combinable, so the hot gram leaves each mapper
     as ONE partial row — reduce-side load is O(mappers), not O(docs
-    sharing the gram) (scripts/scale_rehearsal.py --hot-gram).
+    sharing the gram) (SCALE.md "Round-11: hot-gram skew rehearsal").
     Docs with fewer than ``n`` tokens have no grams and report NULL
     novelty.
 

@@ -26,9 +26,10 @@ the target similarity threshold ~ (1/bands)^(1/rows_per_band).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
-from betl_spark.operators.util import ensure_parallelism
+from betl_spark.io.readers import local_rows
+from betl_spark.operators.util import ensure_parallelism, materialize
 
 # 15 hex digits = 60 bits — fits signed 64-bit in both Spark and DuckDB
 _HASH_HEX = 15
@@ -604,7 +605,7 @@ def ngram_containment_pairs(
 def _checkpoint_with_checksum(edges: DataFrame) -> tuple:
     """Materialize one contraction round AND compute its convergence
     checksum in the SAME job: the (count, order-free hash sum) metrics
-    ride the eager localCheckpoint's materialization as an
+    ride the eager checkpoint's materialization as an
     ``observe()`` side-output (CollectMetrics accumulators), so each
     round is exactly ONE Spark action — no separate probe job. Equal
     checksums across rounds mean the star contraction reached its
@@ -614,12 +615,15 @@ def _checkpoint_with_checksum(edges: DataFrame) -> tuple:
     from pyspark.sql import Observation
 
     obs = Observation()
-    out = edges.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        # decimal(38,0) sum: full-range longs would overflow ANSI bigint
-        F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-    ).localCheckpoint(eager=True)
+    out = materialize(
+        edges.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            # decimal(38,0) sum: full-range longs would overflow ANSI bigint
+            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
+        ),
+        eager=True,
+    )
     got = obs.get
     return out, (got["n"], got["h"])
 
@@ -634,7 +638,7 @@ def _cc_union_find_local(e: DataFrame) -> DataFrame:
     cluster_id=min reachable id) is identical to the distributed
     contraction's fixpoint.
     """
-    id_type = e.schema["src"].dataType.simpleString()
+    id_type = e.schema["src"].dataType
     pdf = e.toPandas()
     parent: dict = {}
 
@@ -654,8 +658,12 @@ def _cc_union_find_local(e: DataFrame) -> DataFrame:
             lo, hi = (rs, rd) if rs < rd else (rd, rs)
             parent[hi] = lo
     rows = [(n, find(n)) for n in parent]
-    return e.sparkSession.createDataFrame(
-        rows, f"node {id_type}, cluster_id {id_type}"
+    return local_rows(
+        e.sparkSession,
+        rows,
+        T.StructType(
+            [T.StructField("node", id_type), T.StructField("cluster_id", id_type)]
+        ),
     )
 
 
@@ -682,7 +690,7 @@ def _cc_large_small_star(
     Small-graph fast path: each distributed round carries a fixed
     driver cost that has nothing to do with data volume — measured at
     sf0.1, ~0.7s/round is Catalyst+AQE plan compilation inside the
-    ``localCheckpoint`` call and only ~0.2s is the probe job, so a
+    checkpoint call and only ~0.2s is the probe job, so a
     4-round contraction of a 4k-edge graph burns ~4s of pure fixed
     overhead. When the exact edge count (already computed by the first
     convergence probe) is ≤ ``small_graph_edges``, the edge list is
@@ -788,7 +796,7 @@ def duplicate_clusters(
     property suite asserts it).
 
     Scale notes: each round is one shuffle join on node id, and
-    ``localCheckpoint`` truncates the lineage so the plan doesn't grow
+    a checkpoint truncates the lineage so the plan doesn't grow
     exponentially with rounds. The convergence test is a cheap count
     on the changed-label set. Graphs whose exact edge count is ≤
     ``small_graph_edges`` resolve with driver-side union-find instead
@@ -807,19 +815,22 @@ def duplicate_clusters(
         )
     if algorithm != "min_label":
         raise ValueError(f"algorithm must be 'min_label' or 'star', got {algorithm!r}")
-    edges = (
+    edges = materialize(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         # a self-pair (x, x) is not a duplicate relationship: drop it
         # here exactly like the star/union-find paths do, so all three
         # algorithms emit the same node set (property-tested)
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    ).localCheckpoint(eager=True)
+    labels = materialize(
+        edges.select(F.col("src").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("label")),
+        eager=True,
+    )
     for _ in range(max_iter):
         # best label any neighbor can offer this node
         offered = (
@@ -827,15 +838,14 @@ def duplicate_clusters(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("label").alias("offered"))
         )
-        new_labels = (
-            labels.join(offered, "node", "left")
-            .select(
+        new_labels = materialize(
+            labels.join(offered, "node", "left").select(
                 "node",
                 F.least(F.col("label"), F.coalesce("offered", F.col("label"))).alias(
                     "label"
                 ),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         changed = (
             new_labels.alias("n")
@@ -1185,9 +1195,7 @@ def repeated_substring_spans(
     # fingerprint stream; without the checkpoint the per-window md5
     # pass runs twice (the semantic_dedup `assigned` pattern — measured
     # 7.5s -> 4.5s at sf0.1)
-    wins = _substring_fingerprints(df, id_col, text_col, k, p).localCheckpoint(
-        eager=False
-    )
+    wins = materialize(_substring_fingerprints(df, id_col, text_col, k, p))
     rep = (
         wins.groupBy("h")
         .agg(F.count_distinct(F.col(id_col)).alias("nd"))

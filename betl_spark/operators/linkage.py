@@ -43,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from betl_spark.operators.util import materialize
+
 #: default edit-distance acceptance threshold for :func:`link_records`
 DEFAULT_THRESHOLD = 3
 
@@ -235,16 +237,6 @@ def similarity_band_sql(
         f"CASE WHEN {ml} = 0 THEN 9 ELSE "
         f"least(9, (10 * ({ml} - ({dist_sql}))) {div} {ml}) END"
     )
-
-
-def similarity_band(
-    dist_sql: str, rec_name_sql: str, master_name_sql: str
-) -> Column:
-    """Spark Column form of :func:`similarity_band_sql` (arguments are
-    SQL fragments over the frame's columns, like round_ratio_expr)."""
-    return F.expr(
-        similarity_band_sql(dist_sql, rec_name_sql, master_name_sql)
-    ).cast("long")
 
 
 # ---- record-vs-record half: blocked fuzzy NAME-PAIR dedup ----
@@ -537,7 +529,7 @@ def cluster_records(
     # corpus-wide distinct re-executes per consumer (guide §5: reuse >
     # recompute for a bounded frame; it is vocabulary-grain by
     # definition)
-    vocab = r.select("name").distinct().localCheckpoint(eager=False)
+    vocab = materialize(r.select("name").distinct())
     pairs = fuzzy_name_pairs(
         vocab, threshold, prefix_len, broadcast_names=broadcast_names, salt=salt
     )
@@ -752,9 +744,7 @@ def incremental_cluster_assign(
     # the in-batch pair join (both sides), the component join-back and
     # the cross pairs; materialize the anti-join once (bounded:
     # unseen-name grain, the smallest set in the problem)
-    fresh = vocab.join(existing, "name", "left_anti").localCheckpoint(
-        eager=False
-    )
+    fresh = materialize(vocab.join(existing, "name", "left_anti"))
     # components among the fresh names (transitive within the batch)
     nn = fuzzy_name_pairs(
         fresh, threshold, prefix_len, broadcast_names=broadcast_names, salt=salt
@@ -825,9 +815,7 @@ def incremental_bridge_audit(
     # the checkpoint each consumer recomputes the corpus-wide
     # distinct + anti-join (guide §5: reuse a bounded frame; the
     # sibling's r14 change, applied here in r15)
-    fresh = r.distinct().join(existing, "name", "left_anti").localCheckpoint(
-        eager=False
-    )
+    fresh = materialize(r.distinct().join(existing, "name", "left_anti"))
     nn = fuzzy_name_pairs(
         fresh, threshold, prefix_len, broadcast_names=broadcast_names, salt=salt
     )

@@ -13,7 +13,10 @@ contract discipline as ``corpus.lm_score``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from betl_spark.io.readers import local_rows
+from betl_spark.operators.util import materialize
 
 
 def _hashed_ngram_features(
@@ -406,7 +409,7 @@ def classifier_train(
     # n_docs rides the checkpoint materialization as an observe()
     # side-output — no separate count job (the CC-round pattern)
     obs = Observation()
-    f = (
+    f = materialize(
         base.select(id_col, "__y")
         .join(doc_feats, [id_col, "__y"], "left")
         .select(
@@ -419,8 +422,8 @@ def classifier_train(
                 bias_entry,
             ).alias("fs"),
         )
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .observe(obs, F.count(F.lit(1)).alias("n")),
+        eager=True,
     )
     n_docs = int(obs.get["n"])
     # NO per-iteration parallelism guard on the checkpointed feature
@@ -461,8 +464,10 @@ def classifier_train(
         if wn and len(wn) > map_literal_max:
             # large model: broadcast-join lookup (the str_to_map
             # literal would be O(model) expression text per iteration)
-            wdf = df.sparkSession.createDataFrame(
-                sorted(wn.items()), "bucket long, wn long"
+            wdf = local_rows(
+                spark,
+                sorted(wn.items()),
+                T.StructType.fromDDL("bucket long, wn long"),
             )
             per_doc = (
                 fx.join(F.broadcast(wdf), "bucket", "left")
@@ -531,7 +536,8 @@ def classifier_train(
             wn[int(r["bucket"])] = wn.get(int(r["bucket"]), 0) - int(
                 math.floor(lr * float(g) / den + 0.5)
             )
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(b, float(v) / 1e9) for b, v in sorted(wn.items())],
-        "bucket long, w double",
+        T.StructType.fromDDL("bucket long, w double"),
     )

@@ -28,7 +28,10 @@ Performance notes (measured on local[32], 64-dim vectors):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F, types as T
+
+from betl_spark.io.readers import local_rows
+from betl_spark.operators.util import materialize
 
 
 def _dot(a, b) -> F.Column:
@@ -387,7 +390,7 @@ def ivf_topk_indexed(
     qw = Window.partitionBy("query_id").orderBy(
         F.desc("cell_sim"), F.asc("cell_id")
     )
-    queries = (
+    queries = materialize(
         qrows.crossJoin(F.broadcast(cents))
         .select(
             "query_id",
@@ -401,7 +404,6 @@ def ivf_topk_indexed(
         .withColumn("cell_rank", F.row_number().over(qw))
         .filter(F.col("cell_rank") <= nprobe)
         .select("query_id", "qv", "qn", "cell_id")
-        .localCheckpoint(eager=False)
     )
     # bounded collect (|queries| x nprobe cell ids) -> LITERAL partition
     # filter, the whole point of the partitioned layout
@@ -719,8 +721,8 @@ def kmeans_train(
             (cell, [vals[p] for p in sorted(vals)])
             for cell, vals in sorted(by_cell.items())
         ]
-        cents = spark.createDataFrame(
-            model, "cell_id long, cv array<double>"
+        cents = local_rows(
+            spark, model, T.StructType.fromDDL("cell_id long, cv array<double>")
         ).select("cell_id", "cv", _norm(F.col("cv")).alias("cn"))
     return cents
 
@@ -808,12 +810,8 @@ def semantic_decontaminate(
             f"{len(centroid_ids)} centroids exceed the single-level "
             f"broadcast bound ({MAX_BROADCAST_CENTROIDS})"
         )
-    cents = _trained_cents(df, id_col, vec_col, centroid_ids).localCheckpoint(
-        eager=False
-    )
-    assigned = _assign_cells(df, id_col, vec_col, cents).localCheckpoint(
-        eager=False
-    )
+    cents = materialize(_trained_cents(df, id_col, vec_col, centroid_ids))
+    assigned = materialize(_assign_cells(df, id_col, vec_col, cents))
     bench_assigned = _assign_cells(bench, id_col, vec_col, cents).select(
         F.col(id_col).alias("__bid"),
         F.col(vec_col).alias("bv"),
@@ -1019,22 +1017,20 @@ def semantic_dedup(
 
         vec_type = df.schema[vec_col].dataType.simpleString()
         id_type = df.schema[id_col].dataType.simpleString()
-        assigned = rows.mapInPandas(
-            assign,
-            f"{id_col} {id_type}, {vec_col} {vec_type},"
-            " _nrm double, cell_id long, cell_sim double",
-        ).localCheckpoint(eager=False)
+        assigned = materialize(
+            rows.mapInPandas(
+                assign,
+                f"{id_col} {id_type}, {vec_col} {vec_type},"
+                " _nrm double, cell_id long, cell_sim double",
+            )
+        )
     else:
         # three consumers read `assigned` (both pair-join sides + the
         # survivor base); without the checkpoint the centroid argmax
-        # recomputes per consumer (measured 3x cost at bench scale).
-        # localCheckpoint materializes it once to executor storage and
-        # truncates lineage (same pattern as duplicate_clusters); at
-        # cluster scale that is one corpus-sized write vs three argmax
-        # passes.
-        assigned = _assign_cells(df, id_col, vec_col, cents).localCheckpoint(
-            eager=False
-        )
+        # recomputes per consumer (measured 3x cost at bench scale); at
+        # cluster scale one corpus-sized materialization beats three
+        # argmax passes.
+        assigned = materialize(_assign_cells(df, id_col, vec_col, cents))
     if pair_backend == "arrow":
         # Arrow/BLAS per-cell matmul (see cell_pairs_arrow): same pair
         # set modulo 6dp rounding-boundary ulps, several times faster —
@@ -1149,9 +1145,7 @@ def semantic_dedup_2level(
     # the fine-to-coarse argmax); without this the k-means update — a
     # corpus-wide argmax — recomputes per consumer. The model is k rows,
     # so the checkpoint is bounded.
-    cents = _trained_cents(df, id_col, vec_col, centroid_ids).localCheckpoint(
-        eager=False
-    )
+    cents = materialize(_trained_cents(df, id_col, vec_col, centroid_ids))
     coarse = cents.filter(F.col("cell_id").isin(coarse_ids)).select(
         F.col("cell_id").alias("coarse_id"),
         F.col("cv").alias("ccv"),
@@ -1207,7 +1201,7 @@ def semantic_dedup_2level(
     # corpus row -> fine cell WITHIN its coarse cell: equi-join on
     # coarse_id (the fine model is distributed by the join — this is
     # the step that removes the whole-model broadcast), then argmax
-    assigned = (
+    assigned = materialize(
         r2c.join(f2c, "coarse_id")
         .select(
             id_col,
@@ -1228,7 +1222,6 @@ def semantic_dedup_2level(
             F.first("_nrm").alias("_nrm"),
             F.max("cell_sim").alias("cell_sim"),
         )
-        .localCheckpoint(eager=False)
     )
     pairs = _cell_pairs(assigned, id_col, vec_col, threshold)
     return _pick_survivors(assigned, pairs, id_col, survivor)
@@ -1430,9 +1423,7 @@ def cross_group_near_dups(
     group_b, cosine_sim).
     """
     cents = _trained_cents(df, id_col, vec_col, centroid_ids)
-    assigned = _assign_cells(df, id_col, vec_col, cents).localCheckpoint(
-        eager=False
-    )
+    assigned = materialize(_assign_cells(df, id_col, vec_col, cents))
     pairs = _cell_pairs(assigned, id_col, vec_col, threshold)
     a = meta.select(
         F.col(id_col).alias("id_a"), F.col(group_col).alias("group_a")
@@ -1496,9 +1487,7 @@ def semantic_dedup_incremental(
     ingest loop closes without ever touching the accumulated corpus.
     """
     cents = spark.read.parquet(f"{index_path}/centroids")
-    assigned = _assign_cells(batch, id_col, vec_col, cents).localCheckpoint(
-        eager=False
-    )
+    assigned = materialize(_assign_cells(batch, id_col, vec_col, cents))
     # bounded collect: |batch cells| ≤ |centroids| — the literal
     # partition filter is the point of the partitioned index layout
     cells = sorted(
@@ -1520,9 +1509,7 @@ def semantic_dedup_incremental(
         .select(id_col)
         .distinct()
     )
-    fresh = assigned.join(contaminated, id_col, "left_anti").localCheckpoint(
-        eager=False
-    )
+    fresh = materialize(assigned.join(contaminated, id_col, "left_anti"))
     pairs = _cell_pairs(fresh, id_col, vec_col, threshold)
     return _pick_survivors(fresh, pairs, id_col, "min_id")
 

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from betl_spark.operators.util import materialize
+
 
 def grouped_quantiles(
     df: DataFrame,
@@ -82,14 +84,14 @@ def ranked_running_sum(
     # ranks. Invisible below ~20·bands rows per partition (the "sample"
     # is the whole partition, boundaries identical regardless of seed);
     # found REAL by the sf1 oracle spot-check (equidepth ranks had
-    # 47,492 distinct of 50,000). localCheckpoint(eager) materializes
-    # the banded rows once — the stats job and every later action on
-    # the returned plan read the SAME bands — and its blocks are freed
-    # by the ContextCleaner when the caller drops the result.
-    banded = (
-        df.repartitionByRange(n_bands, *order_cols)
-        .withColumn("__band", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    # 47,492 distinct of 50,000). An eager materialization fixes the
+    # banded rows once — the stats job and every later action on the
+    # returned plan read the SAME bands.
+    banded = materialize(
+        df.repartitionByRange(n_bands, *order_cols).withColumn(
+            "__band", F.spark_partition_id()
+        ),
+        eager=True,
     )
     from pyspark.sql import Window
 

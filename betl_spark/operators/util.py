@@ -32,6 +32,73 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once for reuse by several consumers or by the
+    next round of a loop: the one place the engine decides how a frame
+    is materialized and how its blocks are freed.
+
+    - With ``sparkContext.getCheckpointDir()`` set (Spark's
+      ``spark.checkpoint.dir``): ``df.checkpoint(eager=eager)``, a
+      reliable checkpoint. Once a job has computed the frame (at once
+      if eager) its rows are written to files and the lineage is cut,
+      so a block lost with its executor is read back from them. The
+      session sets ``spark.cleaner.referenceTracking.cleanCheckpoints``,
+      so the files are deleted when the frame is garbage-collected.
+    - Otherwise ``df.localCheckpoint(eager=eager)``: the rows live only
+      in executor storage, and once a job has computed them the lineage
+      is cut. Lazy sites are no exception, since jobs run while later
+      plans are built: in ``er_3day_chain`` every lazy site was cut
+      before the action. Losing an executor then fails every later
+      query over the frame. In local mode the executor is the driver.
+
+    A checkpoint, not ``persist()``: a persisted frame registers in the
+    CacheManager and stays cached until someone unpersists it, while
+    the blocks a local checkpoint pins are freed by the ContextCleaner
+    once the frame is unreachable. A loop that must free them sooner
+    uses :func:`materialize_tracked` and :func:`release`.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=eager)
+    return df.localCheckpoint(eager=eager)
+
+
+def persistent_rdd_ids(spark) -> set:
+    """IDs of the RDDs currently persisted in this context's block
+    manager (the Scala ``SparkContext.getPersistentRDDs`` map iterated
+    via py4j — ``JavaSparkContext`` exposes no accessor)."""
+    ids = set()
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        ids.add(it.next()._1())
+    return ids
+
+
+def materialize_tracked(df: DataFrame) -> tuple:
+    """``materialize(df, eager=True)`` plus the ids of the RDD blocks
+    it pinned, so the caller can later free EXACTLY those blocks with
+    :func:`release`. A reliable checkpoint pins none.
+
+    ``df.rdd.unpersist()`` cannot do this job: ``DataFrame.rdd``
+    constructs a fresh Java→Python mapped RDD (storage level NONE)
+    on every access, not the checkpointed RDD, so unpersisting it
+    is a no-op."""
+    spark = df.sparkSession
+    before = persistent_rdd_ids(spark)
+    out = materialize(df, eager=True)
+    return out, persistent_rdd_ids(spark) - before
+
+
+def release(spark, ids) -> None:
+    """Drop exactly the tracked checkpoint blocks (non-blocking)."""
+    if not ids:
+        return
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        t = it.next()
+        if t._1() in ids:
+            t._2().unpersist(False)
+
+
 def round6_nanos_ratio_expr(num_sql: str, den_sql: str = "1000000000"):
     """Exact half-away 6dp rounding of ``num/den`` where ``num`` is an
     integer nano-unit SUM (BIGINT or DECIMAL(38,0) fragment) and
@@ -61,17 +128,6 @@ def round6_nanos_ratio_expr(num_sql: str, den_sql: str = "1000000000"):
             f"CASE WHEN ({num_sql}) < 0 THEN -({mag}) ELSE ({mag}) END"
         ).cast("double")
         / F.lit(1e6)
-    )
-
-
-def round6_nanos_ratio_sql(num_sql: str, den_sql: str = "1000000000") -> str:
-    """DuckDB twin of :func:`round6_nanos_ratio_expr` (``//`` floors,
-    but the sign split keeps operands positive so floor == trunc;
-    DuckDB auto-promotes to HUGEINT, matching the DECIMAL widening)."""
-    mag = f"(2 * abs({num_sql}) * 1000000 + ({den_sql})) // (2 * ({den_sql}))"
-    return (
-        f"CAST(CASE WHEN ({num_sql}) < 0 THEN -({mag}) ELSE ({mag}) END "
-        f"AS DOUBLE) / 1000000.0"
     )
 
 

@@ -66,6 +66,10 @@ def build_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # reliable checkpoints (operators.util.materialize, when
+        # spark.checkpoint.dir is set) delete their files once the
+        # checkpointed frame is garbage-collected
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # parquet scans: prune + push down aggressively
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -203,12 +203,13 @@ def test_delta_mode_frees_checkpoint_blocks(spark, mode):
     # JVM block manager — after training, the block manager must hold
     # exactly what it held before (the leak test the advice asked for).
     from betl_spark.operators import bpe
+    from betl_spark.operators.util import persistent_rdd_ids
 
     text = "low lower lowest low low newer newest new wide wider widest"
     df = spark.createDataFrame([(text,)], "text string")
-    before = bpe._persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     out = bpe.train_merges_distributed(df, "text", n_merges=8, mode=mode)
     assert out.count() == 8
-    after = bpe._persistent_rdd_ids(spark)
+    after = persistent_rdd_ids(spark)
     leaked = after - before
     assert not leaked, f"checkpoint blocks leaked: {leaked}"

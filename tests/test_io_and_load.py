@@ -269,12 +269,13 @@ def test_sk_queries_leave_no_persisted_rdd(spark):
     from betl_spark.contract.operators import q_sk_dimension
     from betl_spark.contract.pipeline_e2e import q_star_schema_pipeline
     from betl_spark.contract.streaming_delta import q_scd2_dimension
+    from betl_spark.operators.util import persistent_rdd_ids
     from tests.test_oracle_parity import SMALL_DIR
 
     def persisted() -> set:
         gc.collect()
         spark._jvm.System.gc()
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+        return persistent_rdd_ids(spark)
 
     # ids, not a count: RDDs earlier tests left may be collected meanwhile
     start = persisted()
