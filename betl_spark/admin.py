@@ -36,7 +36,7 @@ from pyspark.sql import SparkSession, types as T
 
 from betl_spark.config import Conf
 from betl_spark.io.datastore import Datastore
-from betl_spark.io.readers import local_rows
+from betl_spark.io.readers import local_rows, read_parquet
 from betl_spark.schema.registry import Column, SchemaRegistry, Table
 
 # Spark type → declared dataType (inverse of registry._TYPE_MAP, used
@@ -66,7 +66,7 @@ def declared_type_for(dt: T.DataType) -> str:
 
 
 def _infer_parquet(spark: SparkSession, store: Datastore, table: str) -> list[Column]:
-    schema = spark.read.parquet(store.table_path(table)).schema
+    schema = read_parquet(spark, store.table_path(table)).schema
     return [Column(f.name, declared_type_for(f.dataType)) for f in schema.fields]
 
 

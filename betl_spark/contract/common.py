@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from betl_spark.config import Conf
 from betl_spark.dataflow.core import DataFlow
+from betl_spark.io.readers import read_parquet
 
 TABLES = (
     "region",
@@ -28,7 +29,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # since round 4), the vectorized reader would reject it — this conf
         # makes it read as long nanos instead, which ts_micros() handles.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def ts_micros(df: DataFrame, col: str = "ts"):

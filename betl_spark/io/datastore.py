@@ -7,7 +7,7 @@ Datastore is a declarative descriptor the readers translate into
 ``spark.read`` options:
 
 - FILESYSTEM → ``spark.read.csv`` (all-string staging semantics)
-- PARQUET    → ``spark.read.parquet`` (the driver's testdata format)
+- PARQUET    → ``read_parquet`` (footer schema, no job; the testdata format)
 - JSONL      → ``spark.read.json`` (newline-delimited records, the
   training-data interchange format; beyond-reference source type —
   pass ``extra['schema']`` at scale to skip the inference scan)

@@ -13,22 +13,16 @@ Reference semantics reproduced (SURVEY.md §1.2):
 Everything returns a lazy DataFrame; no driver-side materialization.
 Two paths also launch no Spark job to build the DataFrame:
 
-- ``read_staged`` takes a staged directory's schema from the footer of
-  its first data file (the ``org.apache.spark.sql.parquet.row.metadata``
-  key the parquet writer stores, the same key Spark's own non-merging
-  inference reads), over the Hadoop ``FileSystem`` on the driver, and
-  reads with that schema. Spark's inference would run a job to read the
-  same footer. It falls back to Spark's inference for a partitioned
-  layout, a directory with no data file, a footer without the key, or
-  ``spark.sql.parquet.mergeSchema`` on.
+- ``read_parquet``, the one batch parquet read, takes the schema Spark's
+  non-merging inference would take (``footer_schema``) on the driver
+  instead of in a job; a missing path, a glob, a partitioned layout and
+  ``mergeSchema`` keep Spark's inference.
 - ``local_rows`` turns driver-side rows into a ``LocalTableScan`` via
   Arrow, never a Python RDD whose every downstream task runs a Python
   worker.
 """
 
 from __future__ import annotations
-
-import json
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -79,38 +73,47 @@ def local_rows(spark: SparkSession, rows: list, schema: T.StructType) -> DataFra
     return spark.createDataFrame(table, schema=schema)
 
 
-ROW_METADATA_KEY = "org.apache.spark.sql.parquet.row.metadata"
-
-
 def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """The Spark schema in the footer of the first data file under a flat
-    parquet directory (or of the file ``path``), read on the driver with
-    parquet-mr: no Spark job. ``None`` where ``read_staged`` falls back,
-    and for a missing path or a glob, which Spark resolves itself."""
+    """The schema Spark's non-merging inference takes for a flat parquet
+    directory or the file ``path``, read on the driver without a job:
+    ``ParquetFileFormat.readSchemaFromFooter`` on the footer of the first
+    data file in path order, under the session's confs. ``None`` where
+    ``read_parquet`` leaves the schema to Spark's inference."""
     if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
         return None
     jvm = spark._jvm
-    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    state = spark._jsparkSession.sessionState()
+    hconf = state.newHadoopConf()
     root = jvm.org.apache.hadoop.fs.Path(path)
     fs = root.getFileSystem(hconf)
     if not fs.exists(root):
         return None
-    first = None
+    data = {}
     for st in fs.listStatus(root):
         name = st.getPath().getName()
         if st.isDirectory():
             return None
-        if first is None and not name.startswith(("_", ".")):
-            first = st
-    if first is None:
+        if not name.startswith(("_", ".")):
+            data[name] = st
+    if not data:
         return None
-    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-        hconf,
-        first,
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    first = data[min(data)]
+    pq = jvm.org.apache.parquet
+    meta = pq.hadoop.ParquetFileReader.readFooter(
+        hconf, first, pq.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
     )
-    row_json = footer.getFileMetaData().getKeyValueMetaData().get(ROW_METADATA_KEY)
-    return None if row_json is None else T.StructType.fromJson(json.loads(row_json))
+    sql = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = sql.ParquetFileFormat.readSchemaFromFooter(
+        pq.hadoop.Footer(first.getPath(), meta), sql.ParquetToSparkSchemaConverter(state.conf())
+    )
+    return T._parse_datatype_json_string(schema.json())
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Batch parquet read with the ``footer_schema`` where there is one,
+    so building it launches no Spark job; otherwise Spark's inference."""
+    schema = footer_schema(spark, path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
 def read_staged(
@@ -119,20 +122,12 @@ def read_staged(
     all_string: bool = True,
     limit: int | None = None,
 ) -> DataFrame:
-    """Read a staged table (parquet dir written by ``write_staged``).
-
-    The schema comes from the first data file's footer
-    (``footer_schema``), so building the read launches no Spark job. A
-    partitioned layout, a directory with no data file, a footer without
-    Spark's row metadata, or ``spark.sql.parquet.mergeSchema`` on falls
-    back to ``spark.read.parquet``'s inference.
+    """``read_parquet`` of a staged table (a ``write_staged`` parquet dir).
 
     Staging layers keep the reference's all-string model; nulls read back
     as '' so operator semantics match (betl/io/fileIO.py:26-51).
     """
-    schema = footer_schema(spark, path)
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path)
+    df = read_parquet(spark, path)
     if all_string:
         df = df.select(
             [F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c) for c in df.columns]
@@ -156,7 +151,7 @@ def read_source_table(
             spark, datastore.table_path(table_name), datastore.delimiter, datastore.quotechar
         )
     elif t == "PARQUET":
-        df = spark.read.parquet(datastore.table_path(table_name))
+        df = read_parquet(spark, datastore.table_path(table_name))
     elif t == "JSONL":
         # newline-delimited JSON: splittable, so record parsing
         # parallelizes like any text scan. Schema inference is an extra

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from betl_spark.io.readers import read_parquet
+
 
 def empty_to_null(df: DataFrame, string_cols: list[str] | None = None) -> DataFrame:
     """'' → NULL for warehouse writes (reference betl/io/dbIO.py:27-28)."""
@@ -303,7 +305,7 @@ def compact_parquet(
     before = _list(path)
     total = sum(os.path.getsize(f) for f in before)
     n_files = max(1, -(-total // (target_file_mb * 1024 * 1024)))  # ceil
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     staging = f"{path.rstrip('/')}__compact_{uuid.uuid4().hex[:8]}"
     writer = df.repartition(int(n_files), *(partition_by or [])) if partition_by else df.coalesce(int(n_files))
     w = writer.write.mode("overwrite")

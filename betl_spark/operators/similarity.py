@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from betl_spark.io.readers import local_rows
+from betl_spark.io.readers import local_rows, read_parquet
 from betl_spark.operators.util import materialize
 
 
@@ -378,9 +378,9 @@ def ivf_topk_indexed(
     — the ONE definition shared with the live path, so a fix there
     applies to both.
     """
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_parquet(spark, f"{path}/centroids")
     # the query lookup never reads cell_id, so no partition-column cast
-    qrows = spark.read.parquet(f"{path}/corpus").filter(
+    qrows = read_parquet(spark, f"{path}/corpus").filter(
         F.col(id_col).isin(query_ids)
     ).select(
         F.col(id_col).alias("query_id"),
@@ -1447,7 +1447,7 @@ def _pruned_index_scan(spark, index_path: str, cells: list) -> DataFrame:
     incremental-dedup path. cell_id comes back cast to long (it is a
     partition directory column, read as int by default)."""
     return (
-        spark.read.parquet(f"{index_path}/corpus")
+        read_parquet(spark, f"{index_path}/corpus")
         .filter(F.col("cell_id").isin([int(c) for c in cells]))
         .withColumn("cell_id", F.col("cell_id").cast("long"))
     )
@@ -1486,7 +1486,7 @@ def semantic_dedup_incremental(
     then be appended to the index (one partitioned write) — the
     ingest loop closes without ever touching the accumulated corpus.
     """
-    cents = spark.read.parquet(f"{index_path}/centroids")
+    cents = read_parquet(spark, f"{index_path}/centroids")
     assigned = materialize(_assign_cells(batch, id_col, vec_col, cents))
     # bounded collect: |batch cells| ≤ |centroids| — the literal
     # partition filter is the point of the partitioned index layout
@@ -1528,7 +1528,7 @@ def append_to_ivf_index(
     ``semantic_dedup_incremental`` then sees today's survivors with no
     rebuild (the assignment rule is the index's, so appended rows land
     in exactly the cells later probes prune to)."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
+    cents = read_parquet(spark, f"{index_path}/centroids")
     assigned = _assign_cells(batch, id_col, vec_col, cents).drop("cell_sim")
     assigned.write.mode("append").partitionBy("cell_id").parquet(
         f"{index_path}/corpus"

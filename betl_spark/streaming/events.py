@@ -20,9 +20,8 @@ compared against the batch-equivalent aggregation — the contract query
 The testdata's physical type for ``events.ts`` has shifted across
 driver rounds (TIMESTAMP(NANOS) read as long nanos through round 3,
 TIMESTAMP(MICROS) read as timestamp_ntz since round 4), so
-``event_stream`` probes the actual footer schema (a metadata-only batch
-read) and normalizes to one ``event_time`` TIMESTAMP column at the
-source — every downstream operator sees a single stable clock.
+``event_stream`` reads the footer schema (``read_parquet``, no job) and
+normalizes to one stable ``event_time`` TIMESTAMP clock at the source.
 """
 
 from __future__ import annotations
@@ -30,7 +29,10 @@ from __future__ import annotations
 import math
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from betl_spark.io.readers import read_parquet
 
 #: the recentProgress list of the last availableNow run (one
 #: StreamingQueryProgress per micro-batch; the final one is ``[-1]``) —
@@ -81,8 +83,8 @@ def event_stream(
     # nanos); no effect on the current TIMESTAMP(MICROS) data
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        schema = spark.read.parquet(path).schema
-    except Exception:
+        schema = read_parquet(spark, path).schema
+    except AnalysisException:  # a missing path or an empty directory
         schema = EVENT_SCHEMA
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:

@@ -5,6 +5,8 @@ assignment and default rows → fact load with SK lookup and −1 fallback."""
 import datetime
 import decimal
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
@@ -19,10 +21,11 @@ from betl_spark.defaults.load import (
     resolve_fact_fks,
     sk_nk_map,
 )
-from betl_spark.io.readers import footer_schema, local_rows, read_staged
+from betl_spark.contract.common import TABLES
+from betl_spark.io.readers import footer_schema, local_rows, read_parquet, read_staged
 from betl_spark.io.writers import write_staged
 from betl_spark.schema.registry import SchemaRegistry, all_string_schema
-from tests.conftest import rows
+from tests.conftest import engine_lines_matching, rows
 
 
 def test_staged_write_read_round_trip_all_string(spark, tmp_path):
@@ -114,10 +117,58 @@ def test_read_staged_schema_equals_spark_inference(spark, tmp_path, kind):
 def test_read_staged_flat_dir_launches_no_job(spark, tmp_path):
     path = str(tmp_path / "flat")
     write_staged(spark.createDataFrame([TYPED_ROW], TYPED_SCHEMA).repartition(3), path)
+    # a file from another writer carries no Spark row metadata in its footer
+    arrow = tmp_path / "arrow"
+    arrow.mkdir()
+    pq.write_table(
+        pa.table({
+            "k": pa.array([1, 2]),
+            "s": pa.array(["a", None]),
+            "ts": pa.array([datetime.datetime(2020, 1, 2), None], pa.timestamp("us")),
+        }),
+        arrow / "part-0.parquet",
+    )
     before = _jobs(spark)
     read_staged(spark, path, all_string=False)
     read_staged(spark, path, all_string=True, limit=1)
+    got = read_staged(spark, str(arrow), all_string=False)
     assert _jobs(spark) == before
+    assert got.schema == spark.read.parquet(str(arrow)).schema
+    assert [f.dataType.simpleString() for f in got.schema] == ["bigint", "string", "timestamp_ntz"]
+
+
+def test_footer_schema_takes_the_first_file_in_path_order(spark, tmp_path):
+    """Spark's non-merging inference reads the first data file in path
+    order, not in listing order."""
+    for name in ("c", "d", "e", "b"):
+        pq.write_table(pa.table({name: [1]}), tmp_path / f"part-{name}.parquet")
+    got = read_parquet(spark, str(tmp_path))
+    assert got.schema == spark.read.parquet(str(tmp_path)).schema
+    assert got.columns == ["b"]
+
+
+@pytest.mark.parametrize("nanos_as_long", ["false", "true"])
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_read_parquet_schema_equals_spark_inference(spark, sf, nanos_as_long):
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(key, "false")
+    spark.conf.set(key, nanos_as_long)
+    try:
+        for name in TABLES:
+            path = f"/root/testdata/{sf}/{name}.parquet"
+            assert footer_schema(spark, path) is not None, name
+            assert read_parquet(spark, path).schema == spark.read.parquet(path).schema, name
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_parquet_reads_only_in_the_reader():
+    """Every batch parquet read in the engine goes through
+    ``io.readers.read_parquet``."""
+    found = engine_lines_matching(
+        r"\.read\b.*(\.parquet\(|format\([\"']parquet)", "io/readers.py"
+    )
+    assert not found, found
 
 
 def test_read_staged_falls_back_for_partitions_and_merge_schema(spark, tmp_path):
@@ -217,16 +268,16 @@ def test_load_path_runs_no_python_rdd(spark, tmp_path, monkeypatch):
 
 
 def test_star_schema_pipeline_plan_build_job_bound(spark):
-    """Building star_schema_pipeline at sf0.001 launches at most 13
-    Spark jobs: the two source-table reads and the staged writes. A
-    schema-inference job per staged read, or a job at SK plan build,
-    pushes it over."""
+    """Building star_schema_pipeline at sf0.001 launches at most 11
+    Spark jobs, the count measured with every parquet read taking its
+    schema from the footer. A schema-inference job for a source-table or
+    staged read, or a job at SK plan build, pushes it over."""
     from betl_spark.contract.pipeline_e2e import q_star_schema_pipeline
     from tests.test_oracle_parity import SMALL_DIR
 
     before = _jobs(spark)
     q_star_schema_pipeline(spark, SMALL_DIR)
-    assert _jobs(spark) - before <= 13
+    assert _jobs(spark) - before <= 11
 
 
 def test_assign_surrogate_keys_dense_in_nk_order(spark):

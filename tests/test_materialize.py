@@ -4,24 +4,12 @@ are local relations, and with ``spark.checkpoint.dir`` set a query over
 eager checkpoints survives the loss of every executor."""
 
 import os
-import re
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from tests.conftest import REPO, engine_lines_matching
 
 
 def test_checkpoints_only_in_the_helper():
-    call = re.compile(r"\.(localCheckpoint|checkpoint)\(")
-    helper = os.path.join(REPO, "betl_spark", "operators", "util.py")
-    found = []
-    for root, _, files in os.walk(os.path.join(REPO, "betl_spark")):
-        for name in files:
-            path = os.path.join(root, name)
-            if not name.endswith(".py") or path == helper:
-                continue
-            with open(path) as fh:
-                for i, line in enumerate(fh, 1):
-                    if call.search(line):
-                        found.append(f"{os.path.relpath(path, REPO)}:{i}")
+    found = engine_lines_matching(r"\.(localCheckpoint|checkpoint)\(", "operators/util.py")
     assert not found, found
 
 

@@ -1,5 +1,7 @@
 """Streaming surface + delta change-capture tests."""
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from betl_spark.defaults.delta import apply_delta, classify_changes
@@ -11,6 +13,7 @@ from betl_spark.streaming import (
     stateful_running_totals,
     tumbling_window_agg,
 )
+from betl_spark.streaming.events import EVENT_SCHEMA
 
 SF = "/root/testdata/sf0.001"
 EVENTS = f"{SF}/events.parquet"
@@ -37,6 +40,23 @@ def test_stream_tumbling_equals_batch(spark):
     got = sorted(map(tuple, out.collect()))
     want = sorted(map(tuple, batch.collect()))
     assert got == want
+
+
+def test_event_stream_falls_back_only_for_an_empty_source(spark, tmp_path):
+    """An empty directory streams with ``EVENT_SCHEMA``; a file that is
+    not parquet fails the schema read at plan build."""
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    stream = event_stream(spark, str(empty))
+    assert stream.isStreaming and stream.drop("event_time").schema == EVENT_SCHEMA
+    out = run_stream_to_table(stream.select("event_id", "event_time"), output_mode="append")
+    assert out.count() == 0
+
+    junk = tmp_path / "junk"
+    junk.mkdir()
+    (junk / "notes.txt").write_text("not parquet")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        event_stream(spark, str(junk))
 
 
 def test_sliding_windows_double_count(spark):
